@@ -8,7 +8,8 @@ executes this as a sequential single-threaded loop, one SQL query + one
 pandas materialization + one file per partition (cli.py:296-326).
 
 Spark-first redesign — same observable layout and commit semantics, but the
-data path is ONE distributed job per table instead of a driver loop:
+data path is ONE distributed job per table instead of a driver loop, and the
+tables commit concurrently:
 
 1.  Each row is assigned its (partition_size, start_partition,
     end_partition) with pure Catalyst arithmetic: the delta cover is
@@ -26,9 +27,18 @@ data path is ONE distributed job per table instead of a driver loop:
 4.  Planned partitions that received zero rows still get an (empty, typed)
     Parquet file — the reference writes them too and the manifest needs the
     complete cover (SURVEY §4.2).
-5.  Commit ordering preserved: data files → per-table ``_metadata``
-    manifest → dataset watermark (cli.py:312-339; crash-recovery contract
-    tested in the reference at tests/test_get_column_info.py:181-225).
+5.  Strict-typed mappings are range-guarded inside the written columns
+    (``functions.mappings.range_guard``): the check runs in the write job,
+    on the rows this run exports, and costs no job of its own.  A failed
+    write commits nothing: the Spark sink stages its files, and the next
+    run rewrites the same delta partitions.
+6.  Each table's body (compile, plan, write, manifest) runs in its own
+    driver thread, and Spark runs the tables' jobs side by side.  Commit
+    ordering is preserved per table — data files → ``_metadata``
+    manifest — and the dataset watermark is written last, once every
+    table has committed; a failure in any table leaves it unmoved
+    (cli.py:312-339; crash-recovery contract tested in the reference at
+    tests/test_get_column_info.py:181-225).
 
 At 100 TB this means: full scan parallelism, one shuffle keyed by the
 partition tuple (naturally balanced — partitions are fixed block ranges),
@@ -38,16 +48,19 @@ and no driver-side data movement at all.
 from __future__ import annotations
 
 import posixpath
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 import pandas as pd  # module-level: applyInPandas type hints resolve here
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from subgraph_extractor_spark import fsio
 from subgraph_extractor_spark.functions.mappings import (
     compile_column_mappings,
     enforce_assertions,
+    overflow_error,
 )
 from subgraph_extractor_spark.plans.config_gate import ensure_config_unchanged
 from subgraph_extractor_spark.plans.manifest import write_consolidated_metadata
@@ -373,17 +386,15 @@ def run_extraction(
     # from the current earliest would mark never-written partitions as done.
     prev_earliest = previous.get("earliest_block")
 
-    written: dict[str, list[str]] = {}
-    for table_name, tconf in config["tables"].items():
+    def commit_table(table_name: str, tconf: dict) -> list[str]:
         sizes = tconf["partition_sizes"]
         block_col = tconf.get("block_column", BLOCK_COLUMN)
-        df = tables[table_name]
-
         compiled = compile_column_mappings(
             tconf.get("column_mappings"), tconf.get("numeric_columns", ())
         )
-        enforce_assertions(df, compiled)
-        out_df = compiled.apply(df).drop(*tconf.get("drop_columns", ()))
+        out_df = enforce_assertions(tables[table_name], compiled).drop(
+            *tconf.get("drop_columns", ())
+        )
 
         cover = get_partitions(earliest_block, latest_block, sizes)
         prev_cover = (
@@ -408,7 +419,7 @@ def run_extraction(
             if sink == "arrow"
             else None
         )
-        written[table_name] = extract_table(
+        return extract_table(
             spark,
             out_df,
             table_dir,
@@ -418,6 +429,28 @@ def run_extraction(
             sink=sink,
             arrow_schema=arrow_schema,
         )
+
+    # One driver thread per table: Spark runs their jobs concurrently, so a
+    # run pays each job's fixed cost once, not once per table.  Each target
+    # is wrapped separately so every thread gets its own copy of the
+    # caller's job group, local properties and tags.
+    with ThreadPoolExecutor(max_workers=max(1, len(config["tables"]))) as pool:
+        futures = {
+            name: pool.submit(
+                inheritable_thread_target(spark)(commit_table), name, tconf
+            )
+            for name, tconf in config["tables"].items()
+        }
+    # Every table has finished here; the first failure in config order wins.
+    written: dict[str, list[str]] = {}
+    for name, future in futures.items():
+        exc = future.exception()
+        if exc is not None:
+            overflow = overflow_error(exc)
+            if overflow is not None:
+                raise overflow from exc
+            raise exc
+        written[name] = future.result()
 
     # Watermark LAST — the run-level commit point (cli.py:329-339).
     write_watermark(dataset_dir, earliest_block, latest_block)

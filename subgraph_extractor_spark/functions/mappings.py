@@ -21,11 +21,16 @@ Fidelity notes (SURVEY §7.2):
 - without max_value, an out-of-range value must fail the extraction, not
   wrap (README.md:63-66; the reference's ``safe=False`` cast at cli.py:167
   wraps silently — deviation documented in SURVEY §4.2, we prefer the
-  README contract): enforced via ``strict_range_check`` exprs.
+  README contract): each such column is guarded in place with
+  ``F.raise_error``, so the check runs inside whichever job evaluates the
+  column (the extraction's write job) and sees exactly the rows and
+  columns that are exported.  ``overflow_error`` turns the resulting
+  Spark failure back into the ``OverflowError`` the extraction raises.
 """
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 
 import pandas as pd  # module-level: pandas_udf type hints resolve here
@@ -144,10 +149,11 @@ class CompiledMappings:
     """Output of the compiler: expressions to add, in order."""
 
     columns: dict[str, Column] = field(default_factory=dict)
-    # (column_name, assertion Column) pairs: assertion must be all-true;
-    # enforced by extract via a cheap agg (README "extraction will stop
-    # with an error" contract).
-    assertions: list[tuple[str, Column]] = field(default_factory=list)
+    # Dest names of the strict-typed mappings.  Their expressions in
+    # ``columns`` carry a range guard that raises at evaluation time
+    # (README "extraction will stop with an error" contract); no
+    # separate job checks them.
+    assertions: list[str] = field(default_factory=list)
     # dest column -> "uint8|uint16|uint32|uint64": Spark carries these in
     # widened signed types; the arrow sink narrows them back to unsigned
     # Parquet types like the reference (cli.py:147-155).
@@ -190,14 +196,8 @@ def compile_column_mappings(
                     out.columns[spec["validity_column"]] = validity(expr, mx)
                 expr = clamp(expr, mx, dflt)
             elif type_name in _TYPE_DOMAIN:
-                lo, hi = _TYPE_DOMAIN[type_name]
-                out.assertions.append(
-                    (
-                        dest,
-                        expr.isNull()
-                        | ((expr >= _num_lit(lo)) & (expr <= _num_lit(hi))),
-                    )
-                )
+                expr = range_guard(expr, dest, type_name)
+                out.assertions.append(dest)
             if type_name == "bytes":
                 expr = uint256_to_be_bytes(expr)
             else:
@@ -212,21 +212,41 @@ def compile_column_mappings(
     return out
 
 
-def enforce_assertions(df: DataFrame, compiled: CompiledMappings) -> None:
-    """Fail the extraction if any strict-typed mapping is out of range
-    (README.md:63-66).  One distributed agg over all assertions — a single
-    job, no collect of data rows."""
-    if not compiled.assertions:
-        return
-    checks = df.agg(
-        *[
-            F.min(F.coalesce(a, F.lit(False))).alias(name)
-            for name, a in compiled.assertions
-        ]
-    ).first()
-    bad = [name for name, _ in compiled.assertions if checks[name] is False]
-    if bad:
-        raise OverflowError(
-            f"value(s) out of range for strictly-typed mapping(s) {bad}; "
-            "add max_value/default/validity_column to clamp instead"
-        )
+_OVERFLOW_TEXT = "out of range for strict-typed mapping"
+_OVERFLOW_RE = re.compile(_OVERFLOW_TEXT + r" '([^']*)'")
+
+
+def range_guard(col: Column, dest: str, type_name: str) -> Column:
+    """``col`` where it lies in ``type_name``'s domain (or is null); any
+    other value raises ``USER_RAISED_EXCEPTION`` naming ``dest`` when the
+    row is evaluated."""
+    lo, hi = _TYPE_DOMAIN[type_name]
+    in_range = col.isNull() | ((col >= _num_lit(lo)) & (col <= _num_lit(hi)))
+    msg = F.concat(
+        F.lit(f"{_OVERFLOW_TEXT} '{dest}' ({type_name}): "),
+        col.cast("string"),
+    )
+    return F.when(in_range, col).otherwise(F.raise_error(msg))
+
+
+def enforce_assertions(df: DataFrame, compiled: CompiledMappings) -> DataFrame:
+    """Apply the mappings to ``df`` with every strict-typed mapping guarded
+    (README.md:63-66).  Lazy: an out-of-range value fails the action that
+    evaluates it — for the extraction, its write job, on the rows that
+    run exports — and no job of its own runs here."""
+    return compiled.apply(df)
+
+
+def overflow_error(exc: BaseException) -> OverflowError | None:
+    """The ``OverflowError`` for a Spark failure raised by a strict-typed
+    mapping's guard, naming the mapping(s); None for any other failure."""
+    condition = getattr(exc, "getCondition", None)
+    if condition is None or condition() != "USER_RAISED_EXCEPTION":
+        return None
+    bad = sorted(set(_OVERFLOW_RE.findall(str(exc))))
+    if not bad:
+        return None
+    return OverflowError(
+        f"value(s) out of range for strictly-typed mapping(s) {bad}; "
+        "add max_value/default/validity_column to clamp instead"
+    )

@@ -21,3 +21,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture()
+def in_job_group(spark):
+    """``in_job_group(name, action)`` runs ``action()`` under Spark job group
+    ``name``, clears the group again, and returns ``(result, job ids of the
+    group)``."""
+    sc = spark.sparkContext
+
+    def run(name, action):
+        sc.setJobGroup(name, name)
+        try:
+            result = action()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        return result, list(sc.statusTracker().getJobIdsForGroup(name))
+
+    return run

@@ -5,6 +5,7 @@ recovery, re-coarsening, and the config immutability gate."""
 
 import decimal
 import os
+import pathlib
 
 import pyarrow.parquet as pq
 import pytest
@@ -478,3 +479,143 @@ def test_arrow_sink_reference_export_schema(spark, mock_fs):
     assert tbl.schema.field("_block_number").type == pa.uint32()
     assert tbl.schema.field("ask_price_u64").type == pa.uint64()
     assert tbl.schema.field("ask_price").type == pa.binary()
+
+
+# ---------------------------------------------------------------------------
+# strict-typed range check folded into the write, and tables committed
+# concurrently: the check sees only this run's delta, a failing table never
+# moves the watermark, and the caller's job group reaches every table's jobs.
+# ---------------------------------------------------------------------------
+
+STRICT_CONFIG = {
+    "name": "strict",
+    "version": "1",
+    "subgraph": "QmStrict",
+    "tables": {
+        "checked": {
+            "partition_sizes": [1024],
+            "column_mappings": {"qty": {"qty_i32": {"type": "int32"}}},
+            "drop_columns": ["qty"],
+        },
+        "plain": {"partition_sizes": [1024]},
+    },
+}
+STRICT_DS = "strict/1"
+
+
+def _blocks_df(spark, parts=4, bad_block=-1):
+    """One row per 100 blocks over [0, 8192); ``qty`` is the block number,
+    except at ``bad_block``, where it is out of int32 range."""
+    b = F.col("_block_number")
+    return (
+        spark.range(0, 8192, 100, numPartitions=parts)
+        .withColumnRenamed("id", "_block_number")
+        .withColumn("qty", F.when(b == bad_block, F.lit(2**40)).otherwise(b))
+    )
+
+
+def _strict_td(out, table):
+    return os.path.join(
+        out, STRICT_DS, "data", "subgraph=QmStrict", f"table={table}"
+    )
+
+
+def _commit_bytes(out, tables):
+    """The committed state: each table's manifest and the watermark."""
+    paths = [os.path.join(_strict_td(out, t), "_metadata") for t in tables]
+    paths.append(os.path.join(out, STRICT_DS, "latest.yaml"))
+    return {p: pathlib.Path(p).read_bytes() for p in paths}
+
+
+def _only(table):
+    return {**STRICT_CONFIG, "tables": {table: STRICT_CONFIG["tables"][table]}}
+
+
+def test_strict_overflow_inside_delta_fails_without_commit(spark, tmp_path):
+    out = str(tmp_path)
+    cfg = _only("checked")
+    run_extraction(spark, cfg, {"checked": _blocks_df(spark)}, out, 0, 4096)
+    before = _commit_bytes(out, ["checked"])
+
+    bad = {"checked": _blocks_df(spark, bad_block=5000)}
+    with pytest.raises(OverflowError, match="qty_i32"):
+        run_extraction(spark, cfg, bad, out, 0, 6144)
+    assert _commit_bytes(out, ["checked"]) == before
+
+
+def test_strict_overflow_outside_delta_passes(spark, tmp_path):
+    """The check runs on the rows a run exports, not on the whole source:
+    block 5000 lies beyond this run's cover."""
+    out = str(tmp_path)
+    cfg = _only("checked")
+    bad = {"checked": _blocks_df(spark, bad_block=5000)}
+    run_extraction(spark, cfg, bad, out, 0, 4096)
+    data = _read_via_manifest(_strict_td(out, "checked"))
+    assert data.num_rows == 41  # blocks 0, 100, ..., 4000
+    assert sorted(data.column("qty_i32").to_pylist()) == list(range(0, 4096, 100))
+    assert read_watermark(os.path.join(out, STRICT_DS))["latest_block"] == 4096
+
+
+def test_tables_jobs_inherit_callers_job_group(spark, tmp_path, in_job_group):
+    """Each table commits in its own driver thread; the caller's job group
+    must still label every table's write job.  The tables' sources have 11
+    and 13 partitions, so each write job's map stage names its table."""
+    tracker = spark.sparkContext.statusTracker()
+    tables = {
+        "checked": _blocks_df(spark, parts=11),
+        "plain": _blocks_df(spark, parts=13),
+    }
+    _, jobs = in_job_group(
+        "extract-attribution",
+        lambda: run_extraction(spark, STRICT_CONFIG, tables, str(tmp_path), 0, 4096),
+    )
+
+    def stage_tasks(job):
+        stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(job).stageIds]
+        return [s.numTasks for s in stages if s is not None]
+
+    # a write job consumes the table's shuffle: a map stage plus its own
+    write_jobs = [tasks for tasks in map(stage_tasks, jobs) if len(tasks) >= 2]
+    for parts in (11, 13):
+        assert any(parts in tasks for tasks in write_jobs), (parts, write_jobs)
+
+
+def test_failing_table_isolated_from_concurrent_sibling(spark, tmp_path):
+    """One table fails while its sibling commits concurrently: the sibling
+    finishes, no job outlives the call, the watermark stays, and a re-run
+    on fixed input converges to an uninterrupted run."""
+    sc = spark.sparkContext
+    good = {"checked": _blocks_df(spark), "plain": _blocks_df(spark)}
+    out = str(tmp_path / "interrupted")
+    run_extraction(spark, STRICT_CONFIG, good, out, 0, 4096)
+    before = _commit_bytes(out, ["checked", "plain"])
+
+    bad = {**good, "checked": _blocks_df(spark, bad_block=5000)}
+    with pytest.raises(OverflowError, match="qty_i32"):
+        run_extraction(spark, STRICT_CONFIG, bad, out, 0, 6144)
+    assert list(sc.statusTracker().getActiveJobsIds()) == []
+    after = _commit_bytes(out, ["checked", "plain"])
+    checked_md, plain_md, watermark = (
+        os.path.join(_strict_td(out, "checked"), "_metadata"),
+        os.path.join(_strict_td(out, "plain"), "_metadata"),
+        os.path.join(out, STRICT_DS, "latest.yaml"),
+    )
+    assert after[checked_md] == before[checked_md]
+    assert after[watermark] == before[watermark]
+    # the sibling committed its manifest over the new cover
+    assert after[plain_md] != before[plain_md]
+    assert _read_via_manifest(_strict_td(out, "plain")).num_rows == 62
+
+    run_extraction(spark, STRICT_CONFIG, good, out, 0, 6144)
+    ref = str(tmp_path / "uninterrupted")
+    run_extraction(spark, STRICT_CONFIG, good, ref, 0, 4096)
+    run_extraction(spark, STRICT_CONFIG, good, ref, 0, 6144)
+    for table in ("checked", "plain"):
+        got, want = _strict_td(out, table), _strict_td(ref, table)
+        assert {os.path.dirname(f) for f in read_manifest_files(got)} == {
+            os.path.dirname(f) for f in read_manifest_files(want)
+        }
+        assert _read_via_manifest(got).sort_by("_block_number").equals(
+            _read_via_manifest(want).sort_by("_block_number")
+        )
+    assert read_watermark(os.path.join(out, STRICT_DS))["latest_block"] == 6144

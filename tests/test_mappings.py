@@ -5,6 +5,7 @@ fix)."""
 import decimal
 
 import pytest
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -12,6 +13,7 @@ from subgraph_extractor_spark.functions.mappings import (
     SPARK_TYPE_FOR_MAPPING,
     compile_column_mappings,
     enforce_assertions,
+    overflow_error,
 )
 
 
@@ -68,17 +70,24 @@ def test_clamp_with_validity(spark):
     assert got == [(0, True), (mx, True), (0, False), (0, False)]
 
 
-def test_strict_overflow_fails_extraction(spark):
+def test_strict_overflow_fails_extraction(spark, in_job_group):
     df = _num_df(spark, [0, 2**64])  # exceeds uint64, no max_value
     compiled = compile_column_mappings({"amount": {"a64": {"type": "uint64"}}})
-    with pytest.raises(OverflowError):
-        enforce_assertions(df, compiled)
+    guarded, jobs = in_job_group("strict-overflow", lambda: enforce_assertions(df, compiled))
+    assert jobs == []  # lazy: the check runs in whichever job evaluates it
+    with pytest.raises(PySparkException) as raised:
+        guarded.collect()
+    err = overflow_error(raised.value)
+    assert isinstance(err, OverflowError) and "'a64'" in str(err)
 
 
-def test_strict_in_range_passes(spark):
+def test_strict_in_range_passes(spark, in_job_group):
     df = _num_df(spark, [0, 2**64 - 1])
     compiled = compile_column_mappings({"amount": {"a64": {"type": "uint64"}}})
-    enforce_assertions(df, compiled)  # no raise
+    guarded, jobs = in_job_group("strict-in-range", lambda: enforce_assertions(df, compiled))
+    assert jobs == []
+    got = sorted(int(r["a64"]) for r in guarded.collect())  # no raise
+    assert got == [0, 2**64 - 1]
 
 
 def test_full_readme_type_set_casts(spark):
