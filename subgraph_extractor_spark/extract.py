@@ -17,8 +17,11 @@ tables commit concurrently:
     assignment is an O(#segments) CASE over ``floor(block / size) * size``
     — whole-stage codegen, no UDF, no per-partition query.
 2.  Rows outside the delta (already-exported or incomplete-tail blocks)
-    are filtered out by the same segment predicate — on Parquet sources
-    this prunes at row-group min/max level.
+    are filtered out first, by an OR of the segments' ``[lo, hi)`` ranges
+    on the raw block column.  On a Parquet source that filter reaches the
+    scan as ``PushedFilters``; whether whole row groups are then skipped
+    depends on the source's row-group min/max statistics, which this
+    module does not control.
 3.  One shuffle repartitions by the partition tuple (so each planned
     partition becomes exactly one output file), rows sorted by block
     within partitions (files are block-sorted like the reference's ORDER BY,
@@ -47,11 +50,12 @@ and no driver-side data movement at all.
 
 from __future__ import annotations
 
+import functools
+import operator
 import posixpath
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-import pandas as pd  # module-level: applyInPandas type hints resolve here
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
@@ -109,16 +113,15 @@ def assign_partitions(
             {c: F.lit(None).cast("long") for c in PARTITION_COLS}
         )
     b = F.col(block_col)
+    in_seg = [(b >= F.lit(s.lo)) & (b < F.lit(s.hi)) for s in segs]
+    # The raw-column range filter reaches a Parquet scan as PushedFilters;
+    # the CASE-built size below would not.
+    df = df.filter(functools.reduce(operator.or_, in_seg))
     size_expr = F.lit(None).cast("long")
     # Build reversed so the first segment ends up as the outermost WHEN.
-    for s in reversed(segs):
-        size_expr = (
-            F.when((b >= F.lit(s.lo)) & (b < F.lit(s.hi)), F.lit(s.size))
-            .otherwise(size_expr)
-        )
-    df = df.withColumn("partition_size", size_expr).filter(
-        F.col("partition_size").isNotNull()
-    )
+    for s, cond in reversed(list(zip(segs, in_seg))):
+        size_expr = F.when(cond, F.lit(s.size)).otherwise(size_expr)
+    df = df.withColumn("partition_size", size_expr)
     start = (F.floor(b / F.col("partition_size")) * F.col("partition_size")).cast(
         "long"
     )
@@ -201,16 +204,18 @@ def write_partition_files_arrow(
     block_column: str = BLOCK_COLUMN,
 ) -> list[tuple[int, int, int, int]]:
     """Distributed reference-fidelity sink: one pyarrow Parquet file per
-    planned partition, written ON EXECUTORS via applyInPandas, block-sorted
+    planned partition, written ON EXECUTORS via applyInArrow, block-sorted
     within the file (reference ORDER BY, cli.py:44), with the exact target
     schema (uint32 block column — Spark's own writer cannot emit unsigned
     Parquet types).  Destination is anything fsio resolves (local, s3://,
     s3a://, gs://, mock://) — executors open the filesystem themselves, so
     nothing funnels through the driver.
 
-    One shuffle keyed by the partition tuple (same as the Spark-native
-    sink); the returned action result is one row per written partition:
-    (partition_size, start_partition, end_partition, n_rows).
+    Each group arrives as a ``pa.Table`` and never passes through pandas,
+    so a nullable bigint keeps every bit (pandas would carry it as
+    float64).  One shuffle keyed by the partition tuple (same as the
+    Spark-native sink); the returned action result is one row per written
+    partition: (partition_size, start_partition, end_partition, n_rows).
     """
     schema_bytes = target_schema.serialize().to_pybytes()
     data_cols = [f.name for f in target_schema]
@@ -220,21 +225,21 @@ def write_partition_files_arrow(
 
     mock_root = _os.environ.get("SPARK_GRAFT_MOCK_FS_ROOT")
 
-    def write_group(key, pdf):  # no hints: (key, pdf) eval type is explicit
+    def write_group(key, tbl):
         import os
 
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         if mock_root:
             os.environ["SPARK_GRAFT_MOCK_FS_ROOT"] = mock_root
 
         tgt = pa.ipc.read_schema(pa.BufferReader(schema_bytes))
-        size, start, end = (int(key[0]), int(key[1]), int(key[2]))
-        pdf = pdf.sort_values(block_column, kind="mergesort")
-        tbl = pa.Table.from_pandas(
-            pdf[data_cols], schema=tgt, preserve_index=False
-        )
+        size, start, end = (k.as_py() for k in key)
+        # sort_indices is stable: equal blocks keep their arrival order.
+        order = pc.sort_indices(tbl.column(block_column))
+        out = tbl.take(order).select(data_cols).cast(tgt)
         fs, base = fsio.resolve(table_dir)
         d = posixpath.join(
             base,
@@ -243,17 +248,17 @@ def write_partition_files_arrow(
             f"end_partition={end}",
         )
         fsio.makedirs(fs, d)
-        pq.write_table(tbl, posixpath.join(d, "part-00000.parquet"), filesystem=fs)
-        return pd.DataFrame(
+        pq.write_table(out, posixpath.join(d, "part-00000.parquet"), filesystem=fs)
+        return pa.table(
             {
                 "partition_size": [size],
                 "start_partition": [start],
                 "end_partition": [end],
-                "n_rows": [len(pdf)],
+                "n_rows": [out.num_rows],
             }
         )
 
-    written = tagged.groupBy(*PARTITION_COLS).applyInPandas(
+    written = tagged.groupBy(*PARTITION_COLS).applyInArrow(
         write_group,
         schema=(
             "partition_size long, start_partition long, "

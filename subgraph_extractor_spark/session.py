@@ -9,13 +9,66 @@ the same plans scale to a multi-executor cluster at ~100 TB:
   codec and embedding math).
 - Modest default shuffle partitions for local runs; at cluster scale this is
   governed by AQE's advisory partition size rather than the static number.
+
+Importing this module (the package ``__init__`` does) also makes
+``importlib.invalidate_caches()`` cheap for zip archives that have not
+changed; see ``_guard_zip_rereads``.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
+
+
+def _guard_zip_rereads() -> None:
+    """Make ``zipimporter.invalidate_caches`` skip archives that have not
+    changed since this process last read them.
+
+    Every Spark Python worker call runs ``importlib.invalidate_caches()``
+    (``pyspark.worker_util.setup_spark_files``).  Before CPython 3.13 each
+    ``zipimporter`` then re-reads its archive's whole directory, even in a
+    reused worker: for ``pyspark.zip``, the spark-core jar and py4j that is
+    160-420 ms per call.  The guard keys each read by the archive's
+    ``(st_ino, st_size, st_mtime_ns)``, taken before the read; a call whose
+    stat matches and whose directory is still cached reuses it.  A changed
+    archive, a failed stat or a dropped cache entry falls through to the
+    original method.  From 3.13 upstream only drops the cache entry, so
+    nothing is installed there.
+
+    Python workers pick this up because unpickling the package's data
+    source, reader or UDF imports the package.
+    """
+    if sys.version_info >= (3, 13):
+        return
+    import zipimport
+
+    original = zipimport.zipimporter.invalidate_caches
+    if getattr(original, "_skips_unchanged", False):
+        return
+    read_stamps: dict[str, tuple[int, int, int]] = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            return original(self)
+        stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if files is not None and read_stamps.get(self.archive) == stamp:
+            self._files = files
+            return
+        original(self)
+        if self.archive in zipimport._zip_directory_cache:
+            read_stamps[self.archive] = stamp
+
+    invalidate_caches._skips_unchanged = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_guard_zip_rereads()
 
 # Session-level confs that must hold on ANY session that reads our fixtures,
 # including sessions created by an external driver and handed to us.  All are

@@ -370,6 +370,32 @@ def test_hive_partition_pruning_on_readback(spark, tmp_path):
     )
 
 
+def test_delta_block_range_pushed_to_parquet_scan(spark, tmp_path):
+    """The delta's block ranges reach the source scan as PushedFilters on
+    the raw block column, not only as a filter above a CASE expression."""
+    from subgraph_extractor_spark.extract import assign_partitions
+
+    src = str(tmp_path / "src")
+    spark.range(0, 8192).withColumnRenamed("id", "_block_number").write.parquet(src)
+    # Cover [0,4096) [4096,5120) [5120,6144) [6144,7168); the delta skips
+    # two of them, so it is two segments.
+    cover = get_partitions(0, 7168, [4096, 1024])
+    delta = [p for p in cover if p.start not in (0, 5120)]
+    tagged = assign_partitions(spark.read.parquet(src), "_block_number", delta)
+    key = "spark.sql.maxMetadataStringLength"  # plan text cuts at 100 chars
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1000")
+    try:
+        plan = tagged._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    pushed = plan.split("PushedFilters: [")[1].split("]")[0]
+    for lo, hi in ((4096, 5120), (6144, 7168)):
+        assert f"GreaterThanOrEqual(_block_number,{lo})" in pushed
+        assert f"LessThan(_block_number,{hi})" in pushed
+    assert tagged.count() == 2048
+
+
 def test_empty_partitions_written_and_typed(spark, tmp_path):
     out = str(tmp_path)
     run_extraction(
@@ -479,6 +505,33 @@ def test_arrow_sink_reference_export_schema(spark, mock_fs):
     assert tbl.schema.field("_block_number").type == pa.uint32()
     assert tbl.schema.field("ask_price_u64").type == pa.uint64()
     assert tbl.schema.field("ask_price").type == pa.binary()
+
+
+def test_arrow_sink_keeps_nullable_bigint_exact(spark, tmp_path):
+    """A nullable bigint above 2**53 leaves the arrow sink bit-exact and
+    block-sorted (through pandas it became float64 and was rounded)."""
+    b = F.col("_block_number")
+    df = (
+        spark.range(0, 3000, numPartitions=4)
+        .withColumnRenamed("id", "_block_number")
+        .withColumn(
+            "val", F.when(b % 3 == 0, F.lit(None)).otherwise(F.lit(2**60 + 1) + b)
+        )
+    )
+    config = {
+        "name": "big", "version": "1", "subgraph": "QmBig",
+        "tables": {"t": {"partition_sizes": [1024]}},
+    }
+    run_extraction(spark, config, {"t": df}, str(tmp_path), 0, 3072,
+                   sink="arrow")
+    td = os.path.join(tmp_path, "big", "1", "data", "subgraph=QmBig", "table=t")
+    for f in read_manifest_files(td):
+        blocks = pq.read_table(os.path.join(td, f))["_block_number"].to_pylist()
+        assert blocks == sorted(blocks)
+    got = _read_via_manifest(td)
+    vals = dict(zip(got["_block_number"].to_pylist(), got["val"].to_pylist()))
+    assert got.num_rows == 3000
+    assert vals == {i: None if i % 3 == 0 else 2**60 + 1 + i for i in range(3000)}
 
 
 # ---------------------------------------------------------------------------
