@@ -27,13 +27,17 @@ The per-partition *data* work is a Spark job (see extract.run_extraction).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from typing import Iterable, Sequence
+from itertools import repeat
+from typing import Iterable, NamedTuple, Sequence
 
 
-@dataclass(frozen=True, order=True)
-class Partition:
-    """Half-open, size-aligned block range [start, end), end = start + size."""
+class Partition(NamedTuple):
+    """Half-open, size-aligned block range [start, end), end = start + size.
+
+    A named tuple: it orders and hashes as ``(size, start, end)``, and a
+    cover of millions of one-block partitions is built without a Python
+    call per partition (see ``get_partitions``).
+    """
 
     size: int
     start: int
@@ -72,9 +76,19 @@ def get_partitions(
     for size in sizes:
         lo = (cursor // size) * size  # align down — may dip below earliest
         hi = (latest // size) * size  # only complete partitions of this size
-        while lo < hi:
-            cover.append(Partition(size=size, start=lo, end=lo + size))
-            lo += size
+        # tuple.__new__ over zip is Partition._make without its per-item
+        # Python frame: a cover can hold ~1e7 partitions.
+        cover.extend(
+            map(
+                tuple.__new__,
+                repeat(Partition),
+                zip(
+                    repeat(size),
+                    range(lo, hi, size),
+                    range(lo + size, hi + size, size),
+                ),
+            )
+        )
         cursor = max(cursor, hi)
     return cover
 

@@ -12,7 +12,20 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("tests", master="local[8]", shuffle_partitions=8)
+    # Python workers start in the JVM's working directory, so the daemon
+    # module (worker_daemon.py) is importable only from the repo root.
+    # The conf goes in through the launch arguments, which are restored
+    # once the JVM is up so that subprocess sessions do not inherit it.
+    submit_args = os.environ.get("PYSPARK_SUBMIT_ARGS")
+    if submit_args is None and os.path.isfile("tests/worker_daemon.py"):
+        os.environ["PYSPARK_SUBMIT_ARGS"] = (
+            "--conf spark.python.daemon.module=tests.worker_daemon pyspark-shell"
+        )
+    try:
+        spark = get_spark("tests", master="local[8]", shuffle_partitions=8)
+    finally:
+        if submit_args is None:
+            os.environ.pop("PYSPARK_SUBMIT_ARGS", None)
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
     spark.stop()
