@@ -22,19 +22,25 @@ tables commit concurrently:
     scan as ``PushedFilters``; whether whole row groups are then skipped
     depends on the source's row-group min/max statistics, which this
     module does not control.
-3.  One shuffle repartitions by the partition tuple (so each planned
-    partition becomes exactly one output file), rows sorted by block
-    within partitions (files are block-sorted like the reference's ORDER BY,
-    cli.py:44), then a single ``partitionBy(...).parquet`` write with
-    dynamic partition overwrite → idempotent re-writes for crash recovery.
+3.  One shuffle groups rows by the partition tuple; ``applyInArrow``
+    hands each group to a Python worker as one ``pa.Table``, which sorts
+    it by block (files are block-sorted like the reference's ORDER BY,
+    cli.py:44) and writes it as ``part-00000.parquet`` with the
+    reference's schema (uint32 block column, unsigned mapped columns).  A
+    re-run rewrites the same file name, so crash recovery is idempotent;
+    one partition must fit in a worker's memory, as it fits in one pandas
+    frame in the reference.
 4.  Planned partitions that received zero rows still get an (empty, typed)
-    Parquet file — the reference writes them too and the manifest needs the
-    complete cover (SURVEY §4.2).
+    ``part-empty.parquet`` — the reference writes them too and the
+    manifest needs the complete cover (SURVEY §4.2).  The manifest names
+    exactly the file this run wrote for each delta partition, without
+    listing its directory.
 5.  Strict-typed mappings are range-guarded inside the written columns
     (``functions.mappings.range_guard``): the check runs in the write job,
     on the rows this run exports, and costs no job of its own.  A failed
-    write commits nothing: the Spark sink stages its files, and the next
-    run rewrites the same delta partitions.
+    write commits nothing, but may leave files that no manifest
+    references; the next run overwrites them when it rewrites the same
+    delta partitions.
 6.  Each table's body (compile, plan, write, manifest) runs in its own
     driver thread, and Spark runs the tables' jobs side by side.  Commit
     ordering is preserved per table — data files → ``_metadata``
@@ -77,6 +83,8 @@ from subgraph_extractor_spark.plans.watermark import read_watermark, write_water
 
 PARTITION_COLS = ["partition_size", "start_partition", "end_partition"]
 BLOCK_COLUMN = "_block_number"
+DATA_FILE = "part-00000.parquet"
+EMPTY_FILE = "part-empty.parquet"
 
 
 @dataclass(frozen=True)
@@ -155,17 +163,13 @@ def _write_empty_partition(empty_table, d: str) -> str:
 
     fs, local = fsio.resolve(d)
     fsio.makedirs(fs, local)
-    path = posixpath.join(local, "part-empty.parquet")
-    pq.write_table(empty_table, path, filesystem=fs)
-    return path
+    pq.write_table(empty_table, posixpath.join(local, EMPTY_FILE), filesystem=fs)
+    return fsio.join(d, EMPTY_FILE)
 
 
 # --------------------------------------------------------------------------
-# arrow sink — reference-exact export schema, any fsio destination
+# the writer — reference-exact export schema, any fsio destination
 # --------------------------------------------------------------------------
-
-_PA_UINTS = {"uint8", "uint16", "uint32", "uint64"}
-
 
 def target_arrow_schema(
     df: DataFrame,
@@ -174,7 +178,7 @@ def target_arrow_schema(
 ):
     """The export schema the reference writes (cli.py:20-21, 147-155):
     Spark has no unsigned types, so mapped uintN columns widen in-flight
-    and narrow back to pyarrow uintN at the sink; the block column is
+    and narrow back to pyarrow uintN in the writer; the block column is
     always uint32 (cli.py:111)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -202,8 +206,8 @@ def write_partition_files_arrow(
     table_dir: str,
     target_schema,
     block_column: str = BLOCK_COLUMN,
-) -> list[tuple[int, int, int, int]]:
-    """Distributed reference-fidelity sink: one pyarrow Parquet file per
+) -> set[Partition]:
+    """Distributed reference-fidelity writer: one pyarrow Parquet file per
     planned partition, written ON EXECUTORS via applyInArrow, block-sorted
     within the file (reference ORDER BY, cli.py:44), with the exact target
     schema (uint32 block column — Spark's own writer cannot emit unsigned
@@ -213,9 +217,9 @@ def write_partition_files_arrow(
 
     Each group arrives as a ``pa.Table`` and never passes through pandas,
     so a nullable bigint keeps every bit (pandas would carry it as
-    float64).  One shuffle keyed by the partition tuple (same as the
-    Spark-native sink); the returned action result is one row per written
-    partition: (partition_size, start_partition, end_partition, n_rows).
+    float64).  One shuffle keyed by the partition tuple; the action
+    returns one row per written partition, and so does this function: the
+    partitions that received rows, each now holding ``DATA_FILE``.
     """
     schema_bytes = target_schema.serialize().to_pybytes()
     data_cols = [f.name for f in target_schema]
@@ -248,108 +252,72 @@ def write_partition_files_arrow(
             f"end_partition={end}",
         )
         fsio.makedirs(fs, d)
-        pq.write_table(out, posixpath.join(d, "part-00000.parquet"), filesystem=fs)
+        # Plain like parquet-mr: parquet-cpp keeps dictionaries on uint256s.
+        pq.write_table(
+            out, posixpath.join(d, DATA_FILE), filesystem=fs, use_dictionary=False
+        )
         return pa.table(
             {
                 "partition_size": [size],
                 "start_partition": [start],
                 "end_partition": [end],
-                "n_rows": [out.num_rows],
             }
         )
 
     written = tagged.groupBy(*PARTITION_COLS).applyInArrow(
         write_group,
-        schema=(
-            "partition_size long, start_partition long, "
-            "end_partition long, n_rows long"
-        ),
+        schema="partition_size long, start_partition long, end_partition long",
     )
-    return [
-        (r["partition_size"], r["start_partition"], r["end_partition"], r["n_rows"])
-        for r in written.collect()  # 1 row per partition: plan metadata
-    ]
+    # 1 row per partition: plan metadata
+    return {Partition(*r) for r in written.collect()}
 
 
 def extract_table(
-    spark: SparkSession,
     df: DataFrame,
     table_dir: str,
     delta: list[Partition],
     cover: list[Partition],
+    arrow_schema,
     block_column: str = BLOCK_COLUMN,
-    sort_within: bool = True,
-    sink: str = "spark",
-    arrow_schema=None,
 ) -> list[str]:
     """Write all delta partitions of one table in one distributed job,
     top up empty partitions, and commit the manifest over the full cover.
     Returns the manifest's file list.
 
-    ``sink="spark"`` uses Spark's native parquet writer (fastest; signed
-    Parquet types; destination must be a Hadoop-visible URI).
-    ``sink="arrow"`` uses the distributed pyarrow sink — reference-exact
-    export schema (uint32 block column, cli.py:20-21,147) and any
-    fsio-resolvable destination.
+    Each delta partition contributes exactly the file this run wrote for
+    it — ``DATA_FILE``, or the typed ``EMPTY_FILE`` placeholder when no row
+    fell into it — so leftovers in its directory stay out of the manifest.
     """
-    if delta:
-        tagged = assign_partitions(df, block_column, delta)
-        if sink == "arrow":
-            if arrow_schema is None:
-                arrow_schema = target_arrow_schema(df, block_column)
-            write_partition_files_arrow(
-                tagged, table_dir, arrow_schema, block_column
-            )
-            missing = [
-                p for p in delta if not _list_partition_files(table_dir, p)
-            ]
-            for p in missing:
-                _write_empty_partition(
-                    arrow_schema.empty_table(), partition_dir(table_dir, p)
-                )
-        else:
-            writer = tagged.repartition(*[F.col(c) for c in PARTITION_COLS])
-            if sort_within:
-                writer = writer.sortWithinPartitions(
-                    *PARTITION_COLS, block_column
-                )
-            # Per-write option, NOT a session conf: mutating the shared
-            # session's partitionOverwriteMode would silently change later
-            # callers' overwrite-writes.
-            (
-                writer.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*PARTITION_COLS)
-                .parquet(table_dir)
-            )
-            # Empty planned partitions still need typed placeholder files.
-            missing = [
-                p for p in delta if not _list_partition_files(table_dir, p)
-            ]
-            if missing:
-                empty = (
-                    assign_partitions(df, block_column, delta)
-                    .drop(*PARTITION_COLS)
-                    .limit(0)
-                    .toArrow()
-                )
-                for p in missing:
-                    _write_empty_partition(empty, partition_dir(table_dir, p))
-
-    # Every cover partition MUST have files on disk (delta partitions were
-    # just written — empties included; the rest were committed by earlier
-    # runs).  A hole means lost/deleted data: omitting it from the manifest
-    # would silently shrink the committed snapshot, so fail loudly instead.
+    written = (
+        write_partition_files_arrow(
+            assign_partitions(df, block_column, delta),
+            table_dir,
+            arrow_schema,
+            block_column,
+        )
+        if delta
+        else set()
+    )
+    fresh = set(delta)
     files: list[str] = []
     for p in cover:
-        pf = _list_partition_files(table_dir, p)
-        if not pf:
-            raise RuntimeError(
-                f"cover partition {p.as_tuple()} of {table_dir} has no data "
-                "files on disk; refusing to commit a manifest with holes "
-                "(was the dataset directory modified outside the pipeline?)"
-            )
-        files.extend(pf)
+        d = partition_dir(table_dir, p)
+        if p in written:
+            files.append(fsio.join(d, DATA_FILE))
+        elif p in fresh:
+            files.append(_write_empty_partition(arrow_schema.empty_table(), d))
+        else:
+            # Committed by an earlier run.  A hole means lost/deleted data:
+            # omitting it from the manifest would silently shrink the
+            # committed snapshot, so fail loudly instead.
+            pf = _list_partition_files(table_dir, p)
+            if not pf:
+                raise RuntimeError(
+                    f"cover partition {p.as_tuple()} of {table_dir} has no data "
+                    "files on disk; refusing to commit a manifest with holes "
+                    "(was the dataset directory modified outside the pipeline?)"
+                )
+            files.extend(pf)
     if files:
         write_consolidated_metadata(table_dir, files)
     return files
@@ -362,7 +330,6 @@ def run_extraction(
     output_dir: str,
     earliest_block: int,
     latest_block: int,
-    sink: str = "spark",
 ) -> dict[str, list[str]]:
     """The library entry point, mirroring the reference's ``extract()``
     (cli.py:275-339): pure function of (config, sources, output), with
@@ -419,20 +386,13 @@ def run_extraction(
             f"subgraph={config['subgraph']}",
             f"table={table_name}",
         )
-        arrow_schema = (
-            target_arrow_schema(out_df, block_col, compiled.arrow_types)
-            if sink == "arrow"
-            else None
-        )
         return extract_table(
-            spark,
             out_df,
             table_dir,
             delta,
             cover,
+            target_arrow_schema(out_df, block_col, compiled.arrow_types),
             block_column=block_col,
-            sink=sink,
-            arrow_schema=arrow_schema,
         )
 
     # One driver thread per table: Spark runs their jobs concurrently, so a

@@ -35,10 +35,15 @@ def write_consolidated_metadata(table_dir: str, data_files: list[str]) -> str:
     ``pyarrow.dataset.parquet_dataset`` with the right filesystem) and see
     only the committed cover, regardless of what other files exist under
     the directory.
+
+    Every file must have the first file's Parquet schema.  The files are
+    input from outside this call (earlier runs, other writers), so a
+    mismatch raises ``ValueError`` naming the file before anything is
+    written.
     """
     fs, base = fsio.resolve(table_dir)
     collector = []
-    schema = None
+    schema = first = None
     for f in sorted(data_files):
         _, fp = fsio.resolve(f) if "://" in f else (fs, f)
         if not fp.startswith(base):
@@ -47,7 +52,14 @@ def write_consolidated_metadata(table_dir: str, data_files: list[str]) -> str:
         md = pq.read_metadata(fp, filesystem=fs)
         md.set_file_path(rel)
         if schema is None:
-            schema = pq.read_schema(fp, filesystem=fs)
+            schema, first = pq.read_schema(fp, filesystem=fs), rel
+        elif not md.schema.equals(collector[0].schema):
+            raise ValueError(
+                f"{table_dir}: {rel} has a different Parquet schema from "
+                f"{first}.  Exports written before the reference-exact "
+                "writer (int64 block column, decimal uint64 columns) cannot "
+                "be continued; re-export into a fresh output directory."
+            )
         collector.append(md)
     if schema is None:
         raise ValueError("cannot write a manifest over zero files")

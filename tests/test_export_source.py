@@ -25,7 +25,6 @@ def export_dir(spark, tmp_path):
         str(tmp_path),
         18_000_000,
         19_000_000,
-        sink="arrow",
     )
     return _table_dir(str(tmp_path))
 
@@ -119,7 +118,7 @@ def test_stream_follows_watermark_incrementally(spark, tmp_path):
     from tests.test_extract import ROWS as rows1
     run_extraction(
         spark, CONFIG, {"entity_versions": _entity_df(spark, rows1)},
-        out, 18_000_000, 19_000_000, sink="arrow",
+        out, 18_000_000, 19_000_000,
     )
     _register(spark)
     table_dir = _table_dir(out)
@@ -158,7 +157,7 @@ def test_stream_follows_watermark_incrementally(spark, tmp_path):
     run_extraction(
         spark, CONFIG,
         {"entity_versions": _entity_df(spark, rows2)},
-        out, 18_000_000, 19_200_000, sink="arrow",
+        out, 18_000_000, 19_200_000,
     )
 
     second = drain()  # same checkpoint: only the (19.0M, 19.2M] delta

@@ -15,7 +15,7 @@ from pyspark.sql import types as T
 from subgraph_extractor_spark.extract import run_extraction
 from subgraph_extractor_spark.plans.config_gate import ConfigMismatchError
 from subgraph_extractor_spark.plans.manifest import read_manifest_files
-from subgraph_extractor_spark.plans.partitions import get_partitions
+from subgraph_extractor_spark.plans.partitions import get_partitions, plan_delta
 from subgraph_extractor_spark.plans.watermark import read_watermark
 
 # FIXTURES.md §A1: entity_versions modeling sgd1.prepaid_card_ask_sample
@@ -412,10 +412,86 @@ def test_empty_partitions_written_and_typed(spark, tmp_path):
     assert "ask_price" in schema.names and "_block_number" in schema.names
 
 
+def _partition_dir(td, p):
+    return os.path.join(
+        td, f"partition_size={p.size}", f"start_partition={p.start}",
+        f"end_partition={p.end}",
+    )
+
+
+def test_stray_file_in_delta_partition_stays_out_of_manifest(spark, tmp_path):
+    """The manifest names the one file the writer wrote for each delta
+    partition; another valid Parquet file in that directory (a leftover of
+    a failed run, or a file put there by hand) is not picked up."""
+    import shutil
+
+    sizes = CONFIG["tables"]["entity_versions"]["partition_sizes"]
+    tables = {"entity_versions": _entity_df(spark)}
+    out, ref = str(tmp_path / "out"), str(tmp_path / "ref")
+    for d in (out, ref):
+        run_extraction(spark, CONFIG, tables, d, 18_000_000, 18_700_000)
+    td = _table_dir(out)
+    committed = next(
+        f for f in read_manifest_files(td)
+        if pq.read_metadata(os.path.join(td, f)).num_rows
+    )
+    delta = plan_delta(
+        get_partitions(18_000_000, 18_700_000, sizes),
+        get_partitions(18_000_000, 19_000_000, sizes),
+    )
+    (target,) = [p for p in delta if p.start <= 18_950_001 < p.end]
+    stray_dir = _partition_dir(td, target)
+    os.makedirs(stray_dir, exist_ok=True)
+    shutil.copy(
+        os.path.join(td, committed), os.path.join(stray_dir, "part-stray.parquet")
+    )
+
+    for d in (out, ref):
+        run_extraction(spark, CONFIG, tables, d, 18_000_000, 19_000_000)
+    files = read_manifest_files(td)
+    assert not any(f.endswith("part-stray.parquet") for f in files)
+    assert files == read_manifest_files(_table_dir(ref))
+    assert _read_via_manifest(td).sort_by("_block_number").equals(
+        _read_via_manifest(_table_dir(ref)).sort_by("_block_number")
+    )
+
+
+def test_old_signed_export_fails_before_commit(spark, tmp_path):
+    """A committed cover file with an int64 block column (what Spark's own
+    Parquet writer used to write) cannot join a manifest of uint32 files:
+    the next run raises a ValueError naming it, and commits nothing."""
+    out = str(tmp_path)
+    tables = {"entity_versions": _entity_df(spark)}
+    run_extraction(spark, CONFIG, tables, out, 18_000_000, 18_700_000)
+    td = _table_dir(out)
+    sizes = CONFIG["tables"]["entity_versions"]["partition_sizes"]
+    kept = set(get_partitions(18_000_000, 18_700_000, sizes)) & set(
+        get_partitions(18_000_000, 19_000_000, sizes)
+    )
+    (old,) = [
+        f for f in read_manifest_files(td)
+        if os.path.dirname(f) == os.path.relpath(_partition_dir(td, min(kept)), td)
+    ]
+    path = os.path.join(td, old)
+    t = pq.ParquetFile(path).read()
+    i = t.schema.get_field_index("_block_number")
+    pq.write_table(t.set_column(i, "_block_number", t.column(i).cast("int64")), path)
+    committed = [
+        os.path.join(td, "_metadata"),
+        os.path.join(out, "my_extract_name", "0.0.1", "latest.yaml"),
+    ]
+    before = {p: pathlib.Path(p).read_bytes() for p in committed}
+
+    with pytest.raises(ValueError, match="fresh output directory") as err:
+        run_extraction(spark, CONFIG, tables, out, 18_000_000, 19_000_000)
+    assert old in str(err.value)
+    assert {p: pathlib.Path(p).read_bytes() for p in committed} == before
+
+
 # ---------------------------------------------------------------------------
 # cloud-scheme commit path (VERDICT r01 item 4) + export-schema fidelity
 # (item 7): the full pipeline against a non-file:// scheme through fsio,
-# with the arrow sink producing the reference's exact Parquet types.
+# with the writer producing the reference's exact Parquet types.
 # ---------------------------------------------------------------------------
 
 
@@ -442,11 +518,11 @@ MOCK_TD = (
 
 def test_e2e_extraction_on_mock_scheme(spark, mock_fs):
     """Full lifecycle (config gate -> data -> empty partitions -> manifest
-    -> watermark) against a non-file:// destination, arrow sink."""
+    -> watermark) against a non-file:// destination."""
     out = "mock://exports"
     run_extraction(
         spark, CONFIG, {"entity_versions": _entity_df(spark)}, out,
-        earliest_block=18_000_000, latest_block=19_000_000, sink="arrow",
+        earliest_block=18_000_000, latest_block=19_000_000,
     )
     assert len(read_manifest_files(MOCK_TD)) == 31
     data = _read_mock_manifest(MOCK_TD)
@@ -465,11 +541,9 @@ def test_e2e_extraction_on_mock_scheme(spark, mock_fs):
 def test_e2e_incremental_advance_on_mock_scheme(spark, mock_fs):
     out = "mock://exports"
     tables = {"entity_versions": _entity_df(spark)}
-    run_extraction(spark, CONFIG, tables, out, 18_000_000, 18_700_000,
-                   sink="arrow")
+    run_extraction(spark, CONFIG, tables, out, 18_000_000, 18_700_000)
     n1 = _read_mock_manifest(MOCK_TD).num_rows
-    run_extraction(spark, CONFIG, tables, out, 18_000_000, 19_000_000,
-                   sink="arrow")
+    run_extraction(spark, CONFIG, tables, out, 18_000_000, 19_000_000)
     n2 = _read_mock_manifest(MOCK_TD).num_rows
     assert (n1, n2) == (3, 6)
 
@@ -477,7 +551,7 @@ def test_e2e_incremental_advance_on_mock_scheme(spark, mock_fs):
 def test_arrow_sink_reference_export_schema(spark, mock_fs):
     """Reference types the block column pyarrow.uint32 (cli.py:20-21,111,
     147) and mapped uintN columns as unsigned Parquet types (cli.py:
-    147-155); Spark's native writer cannot, so the arrow sink must."""
+    147-155); Spark's native writer cannot, so the export's writer must."""
     import pyarrow as pa
 
     config = {
@@ -499,7 +573,7 @@ def test_arrow_sink_reference_export_schema(spark, mock_fs):
     }
     run_extraction(
         spark, config, {"entity_versions": _entity_df(spark)}, "mock://exports",
-        earliest_block=18_000_000, latest_block=19_000_000, sink="arrow",
+        earliest_block=18_000_000, latest_block=19_000_000,
     )
     tbl = _read_mock_manifest(MOCK_TD)
     assert tbl.schema.field("_block_number").type == pa.uint32()
@@ -508,7 +582,7 @@ def test_arrow_sink_reference_export_schema(spark, mock_fs):
 
 
 def test_arrow_sink_keeps_nullable_bigint_exact(spark, tmp_path):
-    """A nullable bigint above 2**53 leaves the arrow sink bit-exact and
+    """A nullable bigint above 2**53 leaves the writer bit-exact and
     block-sorted (through pandas it became float64 and was rounded)."""
     b = F.col("_block_number")
     df = (
@@ -522,8 +596,7 @@ def test_arrow_sink_keeps_nullable_bigint_exact(spark, tmp_path):
         "name": "big", "version": "1", "subgraph": "QmBig",
         "tables": {"t": {"partition_sizes": [1024]}},
     }
-    run_extraction(spark, config, {"t": df}, str(tmp_path), 0, 3072,
-                   sink="arrow")
+    run_extraction(spark, config, {"t": df}, str(tmp_path), 0, 3072)
     td = os.path.join(tmp_path, "big", "1", "data", "subgraph=QmBig", "table=t")
     for f in read_manifest_files(td):
         blocks = pq.read_table(os.path.join(td, f))["_block_number"].to_pylist()
