@@ -2262,10 +2262,10 @@ def q_pipeline_crawl_e2e(spark, sf):
     # survivor pass and the two reattach joins) each rebuilt the whole
     # scan -> ArrowEvalPython subtree — 4 parquet scans and 6 Arrow
     # evaluations of the parser kernel per run
-    # (plans/r11/pipeline_crawl_e2e_before.txt).  One localCheckpoint
-    # of the extraction output (the repo's standard intra-plan
-    # materialization, scoped to this call — every bench pass still
-    # recomputes from parquet) makes every downstream stage a
+    # (plans/r11/pipeline_crawl_e2e_before.txt, kept in git history).
+    # One localCheckpoint of the extraction output (the repo's standard
+    # intra-plan materialization, scoped to this call — every bench pass
+    # still recomputes from parquet) makes every downstream stage a
     # metadata-only join: 1 scan, 1 Arrow eval.  `_html` is projected
     # away first so only the extracted text is materialized.
     gated = gated.select(
@@ -3690,9 +3690,9 @@ def _part_co_order_edges(spark, sf):
     # distinct-part arrays and the adjacent pairing is a codegen
     # transform.  Identical edge multiset by construction (l_partkey
     # is NOT NULL, so collect_set's null-dropping never fires);
-    # scripts/edges_ab_r12.py asserts multiset equality and full
-    # graph_lpa output equality, interleaved min-of-5 lpa-noop
-    # 5.642 -> 4.886 s at sf0.1.
+    # scripts/edges_ab_r12.py (kept in git history) asserted multiset
+    # equality and full graph_lpa output equality, interleaved min-of-5
+    # lpa-noop 5.642 -> 4.886 s at sf0.1.
     li = _t(spark, sf, "lineitem")
     return (
         li.groupBy("l_orderkey")
@@ -3742,15 +3742,16 @@ def q_dedup_bloom_probe(spark, sf):
     # r11 opt (guide §2.4, §8 "decide with small rows"): the previous
     # formulation rebuilt every shared subtree per consumer — 8 scans
     # of documents, TWO sketch builds and TWO cogroup probes per run
-    # (plans/r11/dedup_bloom_probe_before.txt) — because corpus_digests
-    # fed bloom_build AND the residual anti-join, batch fed the
-    # incremental op AND a second probe AND the distinct count, and the
-    # unreused sketch subtree was inlined under both probes.  The
-    # digests ARE the decision metadata, so: one digest pass per side
-    # (checkpointed — tiny 64-hex tables), one sketch build, and ONE
-    # probe whose split serves both faces: the pruned-count face
-    # (definitely-new rows = Bloom-negative) and the survivor face
-    # (definitely-new + anti-join residual of the Bloom-positive).
+    # (plans/r11/dedup_bloom_probe_before.txt, kept in git history) —
+    # because corpus_digests fed bloom_build AND the residual anti-join,
+    # batch fed the incremental op AND a second probe AND the distinct
+    # count, and the unreused sketch subtree was inlined under both
+    # probes.  The digests ARE the decision metadata, so: one digest
+    # pass per side (checkpointed — tiny 64-hex tables), one sketch
+    # build, and ONE probe whose split serves both faces: the
+    # pruned-count face (definitely-new rows = Bloom-negative) and the
+    # survivor face (definitely-new + anti-join residual of the
+    # Bloom-positive).
     # Identical composed result — the probe input (min-id row per batch
     # digest) is the same representative set the incremental operator's
     # per-digest window picked, and the oracle's n_batch_distinct is

@@ -20,7 +20,6 @@ capability Spark-first:
                    column plumbing.
 - ``extract``    — the end-to-end incremental extraction pipeline
                    (reference: cli.py:275-339) on Spark.
-- ``streaming``  — Structured Streaming surface over the events table.
 
 Everything data-sized runs as Spark DataFrame plans (Catalyst-optimized,
 whole-stage codegen); only plan *metadata* (partition covers, watermarks,

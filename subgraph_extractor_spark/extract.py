@@ -34,7 +34,10 @@ tables commit concurrently:
     ``part-empty.parquet`` — the reference writes them too and the
     manifest needs the complete cover (SURVEY §4.2).  The manifest names
     exactly the file this run wrote for each delta partition, without
-    listing its directory.
+    listing its directory.  A cover partition committed by an earlier run
+    is listed, and only the writer's two file names (``part-00000``,
+    ``part-empty``) enter the manifest, so a stray file left in such a
+    directory never joins a later snapshot.
 5.  Strict-typed mappings are range-guarded inside the written columns
     (``functions.mappings.range_guard``): the check runs in the write job,
     on the rows this run exports, and costs no job of its own.  A failed
@@ -148,13 +151,15 @@ def partition_dir(table_dir: str, p: Partition) -> str:
 
 
 def _list_partition_files(table_dir: str, p: Partition) -> list[str]:
-    """Data files of one partition dir, as paths in table_dir's scheme."""
+    """The writer's files in one partition dir (``DATA_FILE`` and/or
+    ``EMPTY_FILE``), as paths in table_dir's scheme.  Any other file there
+    is not the writer's and stays out of the manifest."""
     d = partition_dir(table_dir, p)
     fs, local = fsio.resolve(d)
     return [
         fsio.join(d, f)
         for f in fsio.listdir(fs, local)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
+        if f in (DATA_FILE, EMPTY_FILE)
     ]
 
 
@@ -313,9 +318,12 @@ def extract_table(
             pf = _list_partition_files(table_dir, p)
             if not pf:
                 raise RuntimeError(
-                    f"cover partition {p.as_tuple()} of {table_dir} has no data "
-                    "files on disk; refusing to commit a manifest with holes "
-                    "(was the dataset directory modified outside the pipeline?)"
+                    f"cover partition {p.as_tuple()} of {table_dir} has no "
+                    f"{DATA_FILE} or {EMPTY_FILE} on disk; refusing to "
+                    "commit a manifest with holes (was the dataset directory "
+                    "modified outside the pipeline?  An export written "
+                    "before the reference-exact writer names its files "
+                    "differently: re-export it into a fresh output directory)"
                 )
             files.extend(pf)
     if files:

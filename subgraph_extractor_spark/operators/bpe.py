@@ -178,8 +178,8 @@ def train_bpe(
         # adjacent are returned untouched (no new array).  The guard +
         # fold replaced the r11 Arrow pandas_udf kernel that rewrote
         # EVERY word's symbol array every round: A/B at sf0.1
-        # (scripts/bpe_ab_r12.py, fresh sessions, min-of-3) —
-        # Arrow-everything 11.28 s vs codegen+guard 7.25 s end-to-end,
+        # (scripts/bpe_ab_r12.py, in git history; fresh sessions, min-of-3)
+        # — Arrow-everything 11.28 s vs codegen+guard 7.25 s end-to-end,
         # merge phase 14.2 -> 4.6 s warm, merge lists identical.  A
         # filter/union split (Arrow kernel over hit rows only) was
         # measured FATAL: localCheckpoint keeps union partitioning, so

@@ -80,19 +80,6 @@ def hashed_bigram_counts(
     )
 
 
-def merge_hashed_counts(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Fold two hashed-gram count states — counts are mergeable by
-    addition (the aggstate property), so the raw-corpus model refreshes
-    incrementally: count(A ∪ B) == merge(count(A), count(B)) exactly,
-    whatever the split.  O(B) rows in, O(B) rows out."""
-    return (
-        a.select("h", "cnt")
-        .unionByName(b.select("h", "cnt"))
-        .groupBy("h")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
 def importance_weights(
     target_counts: DataFrame,
     raw_counts: DataFrame,

@@ -306,7 +306,7 @@ def mg_merge(
     fold chains can pass ``eager=False`` and evaluate in one job.
     ``eager=True`` (the default) keeps the <= m+1-row
     ``localCheckpoint`` — the bounded-state discipline for unbounded
-    incremental folds (the streaming sink).
+    incremental folds.
 
     Values are identical to the two-reference formulation: same
     key-wise counter sums, same (desc counter, asc key) rank order for

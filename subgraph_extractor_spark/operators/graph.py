@@ -252,9 +252,9 @@ def pagerank_fixed_point(
             # materialization rides the FINAL eager checkpoint's job
             # instead of paying a barrier job per cadence point — the
             # whole fixed iteration is ONE job.  A/B at sf0.1
-            # (scripts/pagerank_ab_r12.py, interleaved min-of-3, 10
-            # rounds, rows identical): eager-every-3 11.22 s vs
-            # lazy-every-3 8.64 s; lazy-every-1 measured 8.07 s —
+            # (scripts/pagerank_ab_r12.py, in git history; interleaved
+            # min-of-3, 10 rounds, rows identical): eager-every-3 11.22 s
+            # vs lazy-every-3 8.64 s; lazy-every-1 measured 8.07 s —
             # within window noise of lazy-every-3, so the pinned
             # every-3 cadence stays.  Failure envelope unchanged: all
             # segment blocks are computed inside the one job, and
@@ -360,8 +360,8 @@ def triangle_counts(
     (v, w) is an oriented edge, which requires exactly that order, so
     the filter drops only never-closing rows (>2x fewer closure-join
     probes; interleaved A/B at sf0.1's 1.2M-edge clique graph: 1.19-
-    1.35x, row sets identical — scripts/triangles_ab_r12.py).  Cost:
-    one extra BIGINT per persisted edge row.
+    1.35x, row sets identical — scripts/triangles_ab_r12.py, in git
+    history).  Cost: one extra BIGINT per persisted edge row.
 
     Output: (node, n_triangles) for every node of the graph (0 rows
     for isolated ids never appearing in an edge; nodes in no triangle
@@ -525,20 +525,20 @@ def hits_fixed_point(
     # ONE unpartitioned persist (r12, reverting the r11 two-
     # pre-partitioned-views shape and resolving the r11 ADVICE note on
     # its 2x cached footprint of the largest relation): the A/B
-    # (scripts/hits_ab.py + scripts/hits_scale_ab_r12.py, interleaved,
-    # row sets identical) measured the single persist FASTEST at every
-    # scale tried — fixture 574k edges/6 rounds: 16.5 vs 19.2 s
-    # (two partitioned persists) / 19.5 s (one partitioned + derived
-    # dst view); 2M edges/4 rounds: 14.0 vs 17.7 / 13.9; 8M edges
-    # (~800k nodes, past the score-side broadcast threshold — the SMJ
-    # regime the partitioned views were built for): 44.8 vs 57.9 /
-    # 44.7.  The partitioned views never paid off because a cached
-    # repartition's partitioning is not recognized by the join
-    # planner under AQE (UnknownPartitioning on the InMemoryRelation
-    # scan — the same effect that sank the r11 triangles
-    # pre-partitioning attempt), so both extra exchanges + the second
-    # cache fill were pure cost.  Only the N-row score table shuffles
-    # per iteration either way.
+    # (scripts/hits_ab.py + scripts/hits_scale_ab_r12.py, in git
+    # history; interleaved, row sets identical) measured the single
+    # persist FASTEST at every scale tried — fixture 574k edges/6
+    # rounds: 16.5 vs 19.2 s (two partitioned persists) / 19.5 s (one
+    # partitioned + derived dst view); 2M edges/4 rounds: 14.0 vs 17.7
+    # / 13.9; 8M edges (~800k nodes, past the score-side broadcast
+    # threshold — the SMJ regime the partitioned views were built
+    # for): 44.8 vs 57.9 / 44.7.  The partitioned views never paid off
+    # because a cached repartition's partitioning is not recognized by
+    # the join planner under AQE (UnknownPartitioning on the
+    # InMemoryRelation scan — the same effect that sank the r11
+    # triangles pre-partitioning attempt), so both extra exchanges + the
+    # second cache fill were pure cost.  Only the N-row score table
+    # shuffles per iteration either way.
     ed = edges.select(
         F.col(src).alias("_src"), F.col(dst).alias("_dst")
     ).persist()
@@ -568,7 +568,7 @@ def hits_fixed_point(
     # returned contract — every node of the graph — is unchanged).
     # A/B at sf0.1 (574k edges, 6 rounds, interleaved min-of-3):
     # dense 12.3 s, sparse 7.8 s; value-identical row sets asserted
-    # in-harness (scripts/hits_ab.py).
+    # in-harness (scripts/hits_ab.py, kept in git history).
     norm = (
         lambda col: F.expr(  # noqa: E731
             f"(CAST(coalesce(_raw, 0L) AS DECIMAL(38,0))"
@@ -715,32 +715,31 @@ def label_propagation(
     Scale shape (per round): the doubled adjacency persists ONCE,
     UNPARTITIONED (r12 — the HITS finding applied here: a cached
     repartition's partitioning is not recognized by the join planner
-    under AQE, so the r11 ``repartition("nbr")`` before the persist
-    paid a build-time E-row exchange for nothing; interleaved A/B at
-    sf0.1, 4 rounds, min-of-5: eager+partitioned 2.93 s vs
-    eager+unpartitioned 2.38 s, scripts/lpa_ab_r12.py); only the N-row
-    label table shuffles.  The vote stream repartitions by ``node``
-    ONCE and both aggregates (the (node, label) count and the
-    min-struct argmax) run on top WITHOUT further exchange —
-    hashpartitioning(node) satisfies the clustering requirement of
-    both grouping keys, so each round is exactly two shuffles (label
-    join + vote repartition) instead of three (same-session A/B at
-    sf0.1, 4 rounds, min-of-4: 4.20 s two-exchange vs 3.86 s
-    one-exchange; at scale it trades the map-side combine of the pair
-    count for one fewer full-stage barrier and shuffles the same-order
-    E-row stream once instead of twice).  Votes reference the label
-    table twice (the adjacency join and the self-vote union), so
-    lineage replicates 2x per round — ``localCheckpoint`` truncates
-    every ``checkpoint_every`` rounds (r9 cadence table, measured with
-    EAGER checkpoints: every-1 4.7 s, every-2 5.3 s, every-4 9.6 s for
-    4 rounds — the doubled lineage costs more than the barrier it
-    saves, so every-1 stays the default).  r12: the mid-loop
-    checkpoints are LAZY (the pagerank round-fusion lesson): they
-    still truncate per round, but materialize inside the final eager
-    checkpoint's job — one job per run instead of one per round
-    (lazy+unpartitioned 2.26 s min-of-5 vs 2.38 eager+unpartitioned /
-    2.93 shipped-r11 in the same interleaved A/B).  Counts are bounded
-    by degree+1: no overflow envelope needed.
+    under AQE, so the r11 ``repartition("nbr")`` before the persist paid
+    a build-time E-row exchange for nothing; interleaved A/B at sf0.1, 4
+    rounds, min-of-5: eager+partitioned 2.93 s vs eager+unpartitioned
+    2.38 s, scripts/lpa_ab_r12.py, in git history); only the N-row label
+    table shuffles.  The vote stream repartitions by ``node`` ONCE and
+    both aggregates (the (node, label) count and the min-struct argmax)
+    run on top WITHOUT further exchange — hashpartitioning(node)
+    satisfies the clustering requirement of both grouping keys, so each
+    round is exactly two shuffles (label join + vote repartition)
+    instead of three (same-session A/B at sf0.1, 4 rounds, min-of-4:
+    4.20 s two-exchange vs 3.86 s one-exchange; at scale it trades the
+    map-side combine of the pair count for one fewer full-stage barrier
+    and shuffles the same-order E-row stream once instead of twice).
+    Votes reference the label table twice (the adjacency join and the
+    self-vote union), so lineage replicates 2x per round —
+    ``localCheckpoint`` truncates every ``checkpoint_every`` rounds (r9
+    cadence table, measured with EAGER checkpoints: every-1 4.7 s,
+    every-2 5.3 s, every-4 9.6 s for 4 rounds — the doubled lineage
+    costs more than the barrier it saves, so every-1 stays the default).
+    r12: the mid-loop checkpoints are LAZY (the pagerank round-fusion
+    lesson): they still truncate per round, but materialize inside the
+    final eager checkpoint's job — one job per run instead of one per
+    round (lazy+unpartitioned 2.26 s min-of-5 vs 2.38
+    eager+unpartitioned / 2.93 shipped-r11 in the same interleaved A/B).
+    Counts are bounded by degree+1: no overflow envelope needed.
 
     Output: (node, label) for every node of the graph.
     """

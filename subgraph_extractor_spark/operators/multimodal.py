@@ -324,8 +324,8 @@ def _perceptual_signatures(
                     # valid signature with one undecodable row (None)
                     # would otherwise infer float64 and silently ROUND
                     # every 64-bit signature in the batch to 53-bit
-                    # mantissa precision (caught by the streaming-sink
-                    # stream==batch test; the fixture queries dodged it
+                    # mantissa precision (caught by the since-removed
+                    # streaming-sink test; the fixture queries dodged it
                     # only because one-row-per-partition batches never
                     # mixed junk with valid rows)
                     "_sim": pd.Series(

@@ -550,8 +550,8 @@ def _champion_anchor(n_docs: DataFrame, id_type) -> DataFrame:
     postings for nothing yet still counts toward ``n_docs`` — without
     the anchor that count evaporates, so a later
     :func:`merge_champion_lists` under-counts ``n_docs`` and its idf
-    diverges from a one-shot rebuild (breaking the exact-merge /
-    stream==batch contract).  Real rows always have champ_rank >= 1;
+    diverges from a one-shot rebuild (breaking the exact-merge
+    contract).  Real rows always have champ_rank >= 1;
     anchors are the champ_rank-0 rows, and every serving/merge face
     selects on token/champ_rank, never the raw union.
 

@@ -1062,7 +1062,8 @@ def projected_topk_portable(
         # PySpark worker vs ~1 s converged for this int64 path (the
         # fork-inherited BLAS threadpool misbehaves in workers; the
         # same f64 matmul runs milliseconds in the driver process).
-        # scripts/annproj_ab_r12.py carries the interleaved numbers.
+        # scripts/annproj_ab_r12.py (kept in git history) carries the
+        # interleaved numbers.
         D = Q @ C.T  # exact int64
         for i, qid in enumerate(q_ids):
             D[i, c_ids == qid] = MASK
@@ -2230,12 +2231,11 @@ def binary_sign_sig64(
     """The embedding's sign bits as ONE 64-bit signature ``(_id,
     _sim)`` — the adapter that plugs binary-quantized embeddings into
     the ENTIRE SimHash banded-hamming machinery
-    (``dedup.simhash_pairs_from_sigs``, ``simhash_pairs_incremental``,
-    ``streaming.perceptual_dedup_sink``): banding makes the Hamming
-    coarse pass sub-quadratic (pigeonhole-complete pair generation at
-    a distance budget) exactly as it does for text SimHash and the
-    perceptual media hashes — embeddings become the fifth 64-bit
-    signature family.
+    (``dedup.simhash_pairs_from_sigs``, ``simhash_pairs_incremental``):
+    banding makes the Hamming coarse pass sub-quadratic (pigeonhole-
+    complete pair generation at a distance budget) exactly as it does
+    for text SimHash and the perceptual media hashes — embeddings
+    become the fifth 64-bit signature family.
 
     ``dim`` must be <= 64 (use the first 64 dims of a longer vector —
     a Matryoshka-style prefix — or :func:`binary_sign_pack` +

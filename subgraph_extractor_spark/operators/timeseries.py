@@ -184,8 +184,7 @@ def sliding_counts(
     interval_s: int,
     hop_s: int,
 ) -> DataFrame:
-    """Hopping/sliding window counts, batch face (the streaming face is
-    ``streaming.sliding_counts_stream``): every event lands in the
+    """Hopping/sliding window counts: every event lands in the
     ``interval_s / hop_s`` hop-aligned windows that contain it, via a
     codegen sequence() explode — no self-join, no per-window scans.
     Output (window_start, n_events); ``hop_s`` must divide

@@ -919,245 +919,44 @@ def test_cdc_incremental_equals_full_restricted(spark):
     n201 = len(_ref_cdc_chunks(batch_docs[-1][1], 4))
     assert len(doc201) < n201, (len(doc201), n201)
 
+    # the standing table bucketed by chunk_sha: same survivors, and the
+    # probe reads the corpus straight out of its buckets — exactly ONE
+    # exchange (the batch side), the corpus scan ``Bucketed: true``.
+    # Forced sort-merge so broadcast can't hide the shape; shuffle
+    # partitions pinned to the bucket count (a prior in-process
+    # get_spark() can re-apply another value to the shared session).
+    from subgraph_extractor_spark.operators.bucketing import write_bucketed
 
-def test_cdc_chunks_sink_stream_equals_batch(spark, tmp_path):
-    """Streaming CDC chunk ingestion: the availableNow file stream
-    through cdc_chunks_sink must leave exactly the chunk state the
-    one-shot batch run produces, and a crash-replayed batch must not
-    double-append (overwrite-by-version idempotence)."""
-    import os
-
-    from subgraph_extractor_spark.streaming.demo import (
-        cdc_chunks_sink,
-        serve_cdc_chunks,
-    )
-
-    import random
-    rng = random.Random(31)
-    words = [f"w{j}" for j in range(25)]
-    docs = [
-        (i, " ".join(rng.choice(words) for _ in range(rng.randint(4, 30))))
-        for i in range(16)
-    ]
-    ddf = spark.createDataFrame(docs, "doc_id long, text string")
-    stage = tmp_path / "stage"
-    # two files -> two micro-batches (maxFilesPerTrigger=1)
-    ddf.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-        str(stage / "a")
-    )
-    ddf.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
-        str(stage / "b")
-    )
-    state, kept = str(tmp_path / "state"), str(tmp_path / "kept")
-    stream = (
-        spark.readStream.schema(ddf.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(stage / "*"))
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            cdc_chunks_sink(spark, state, kept, divisor=4)
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    assert q.exception() is None
-    got = {
-        r["chunk_sha"]
-        for r in serve_cdc_chunks(spark, state).collect()
+    table = "cdc_chunks_bucketed_test"
+    pins = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.sources.bucketing.autoBucketedScan.enabled": "false",
     }
-    want = {
-        r["chunk_sha"]
-        for r in dedup.cdc_chunk_dedup(
-            ddf, "doc_id", "text", divisor=4
-        ).collect()
-    }
-    assert got == want
-
-    # crash-replay idempotence on a fresh dir
-    state2, kept2 = str(tmp_path / "s2"), str(tmp_path / "k2")
-    fold = cdc_chunks_sink(spark, state2, kept2, divisor=4)
-    even = ddf.filter(F.col("doc_id") % 2 == 0)
-    odd = ddf.filter(F.col("doc_id") % 2 == 1)
-    fold(even, 0)
-    fold(odd, 1)
-    fold(odd, 1)  # replay
-    got2 = {
-        r["chunk_sha"] for r in serve_cdc_chunks(spark, state2).collect()
-    }
-    assert got2 == want
-
-
-def test_cdc_chunks_sink_append_only_and_compaction(spark, tmp_path):
-    """VERDICT r7 task #2: the restructured path sink writes O(batch)
-    deltas — each state version holds exactly that batch's survivors,
-    never the whole corpus — compacts every ``compact_every`` deltas,
-    prunes dirs superseded by the PREVIOUS snapshot, and the served
-    union always equals the one-shot batch run.  Crash-replay of the
-    compacting batch itself must also reproduce identical state."""
-    import os
-
-    from subgraph_extractor_spark.streaming.demo import (
-        cdc_chunks_sink,
-        serve_cdc_chunks,
-    )
-
-    import random
-    rng = random.Random(47)
-    words = [f"t{j}" for j in range(20)]
-    docs = [
-        (i, " ".join(rng.choice(words) for _ in range(rng.randint(6, 24))))
-        for i in range(12)
-    ]
-    ddf = spark.createDataFrame(docs, "doc_id long, text string")
-    state, kept = str(tmp_path / "state"), str(tmp_path / "kept")
-    fold = cdc_chunks_sink(
-        spark, state, kept, divisor=4, compact_every=2
-    )
-    # 4 single-doc-pair batches -> compactions at batch 1 and 3
-    for b in range(4):
-        batch = ddf.filter(
-            (F.col("doc_id") >= 3 * b) & (F.col("doc_id") < 3 * (b + 1))
-        )
-        fold(batch, b)
-        # O(batch) invariant: the delta holds only this batch's novel
-        # chunks (subset of the batch's own docs), never the corpus
-        delta_ids = {
-            r["doc_id"]
-            for r in spark.read.parquet(f"{state}/v{b}").collect()
-        }
-        assert delta_ids <= {3 * b, 3 * b + 1, 3 * b + 2}
-    dirs = sorted(os.listdir(state))
-    # compaction landed and the first cycle's deltas were pruned at
-    # the SECOND compaction (c1 retained until c3's successor)
-    assert "c3" in dirs and "c1" in dirs
-    assert "v0" not in dirs and "v1" not in dirs
-    assert "v2" in dirs and "v3" in dirs
-    got = {
-        tuple(r)
-        for r in serve_cdc_chunks(spark, state).collect()
-    }
-    want = {
-        tuple(r)
-        for r in dedup.cdc_chunk_dedup(ddf, "doc_id", "text", divisor=4)
-        .collect()
-    }
-    assert got == want
-    # crash-replay of the compacting batch: the previous snapshot +
-    # its cycle's deltas are still on disk, so the corpus rebuilds
-    fold(ddf.filter((F.col("doc_id") >= 9) & (F.col("doc_id") < 12)), 3)
-    got2 = {
-        tuple(r) for r in serve_cdc_chunks(spark, state).collect()
-    }
-    assert got2 == want
-
-
-def test_cdc_chunks_sink_derives_id_type(spark, tmp_path):
-    """ADVICE r7: the empty-corpus schema on the FIRST micro-batch is
-    derived from the batch, so a non-LONG id column works."""
-    from subgraph_extractor_spark.streaming.demo import (
-        cdc_chunks_sink,
-        serve_cdc_chunks,
-    )
-
-    ddf = spark.createDataFrame(
-        [("u1", "a b c d"), ("u2", "a b c d e")],
-        "doc_id string, text string",
-    )
-    state, kept = str(tmp_path / "s"), str(tmp_path / "k")
-    fold = cdc_chunks_sink(spark, state, kept, divisor=4)
-    fold(ddf, 0)
-    out = serve_cdc_chunks(spark, state)
-    assert dict(out.dtypes)["doc_id"] == "string"
-    assert out.count() > 0
-
-
-def test_cdc_chunks_sink_bucketed_plan_and_state(spark, tmp_path):
-    """The bucketed-table sink: stream state == one-shot batch run,
-    partition-drop replay idempotence, and — the r7 review's scale
-    requirement — a second ingest batch's corpus probe reads the
-    standing state straight out of its buckets: exactly ONE exchange
-    in the anti-join plan, on the batch side, with the corpus scan
-    marked ``Bucketed: true``."""
-    from subgraph_extractor_spark.operators.dedup import (
-        cdc_chunk_dedup_incremental,
-    )
-    from subgraph_extractor_spark.streaming.demo import (
-        cdc_chunks_sink_bucketed,
-        serve_cdc_chunks_bucketed,
-    )
-
-    import random
-    rng = random.Random(53)
-    words = [f"b{j}" for j in range(18)]
-    docs = [
-        (i, " ".join(rng.choice(words) for _ in range(rng.randint(6, 24))))
-        for i in range(10)
-    ]
-    ddf = spark.createDataFrame(docs, "doc_id long, text string")
-    table = "cdc_chunks_state_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    old = {k: spark.conf.get(k, None) for k in pins}
     try:
-        kept = str(tmp_path / "kept")
-        fold = cdc_chunks_sink_bucketed(
-            spark, table, kept, divisor=4, n_buckets=8
+        write_bucketed(standing, table, "chunk_sha", 8)
+        for k, v in pins.items():
+            spark.conf.set(k, v)
+        probe = dedup.cdc_chunk_dedup_incremental(
+            bdf, "doc_id", "text", spark.table(table), divisor=4
         )
-        first = ddf.filter(F.col("doc_id") < 5)
-        second = ddf.filter(F.col("doc_id") >= 5)
-        fold(first, 0)
-        fold(second, 1)
-        fold(second, 1)  # crash replay: drop-partition + re-append
-        got = {
-            tuple(r)
-            for r in serve_cdc_chunks_bucketed(spark, table).collect()
-        }
-        want = {
-            tuple(r)
-            for r in dedup.cdc_chunk_dedup(ddf, "doc_id", "text", divisor=4)
-            .collect()
-        }
-        assert got == want
-
-        # plan shape of a THIRD ingest's probe against the standing
-        # table (forced sort-merge so broadcast can't hide the shape).
-        # The one-exchange shape needs the join's target partitioning to
-        # align with the table's 8 buckets — pin shuffle.partitions=8
-        # explicitly (the conftest default, but a prior in-process
-        # get_spark() can have re-applied 32 to the shared session) and
-        # keep the auto-bucketed-scan cost rule from disabling the
-        # bucketed read in a warm session.
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        old_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        old_abs = spark.conf.get(
-            "spark.sql.sources.bucketing.autoBucketedScan.enabled", "true"
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        spark.conf.set(
-            "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false"
-        )
-        try:
-            corpus = spark.table(table).drop("_v")
-            probe = cdc_chunk_dedup_incremental(
-                ddf, "doc_id", "text", corpus, divisor=4
-            )
-            plan = probe._jdf.queryExecution().executedPlan().toString()
-            exchanges = [
-                ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln
-            ]
-            assert len(exchanges) == 1, plan
-            assert "chunk_sha" in exchanges[0], plan
-            assert "Bucketed: true" in plan, plan
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-            spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
-            spark.conf.set(
-                "spark.sql.sources.bucketing.autoBucketedScan.enabled",
-                old_abs,
-            )
+        plan = probe._jdf.queryExecution().executedPlan().toString()
+        exchanges = [
+            ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln
+        ]
+        assert len(exchanges) == 1 and "chunk_sha" in exchanges[0], plan
+        assert "Bucketed: true" in plan, plan
+        assert {
+            (r["doc_id"], r["chunk_pos"], r["chunk_sha"])
+            for r in probe.collect()
+        } == inc
     finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
@@ -1199,85 +998,6 @@ def test_cdc_doc_novelty_reference_and_payoff(spark):
     n, nov = out[103]
     assert 0 < nov < n / 2                     # prepend: bounded damage
     assert out[105][1] == out[105][0]          # fresh: all novel
-
-
-def test_cdc_chunks_sink_bucketed_through_writestream(spark, tmp_path):
-    """The bucketed sink driven by an actual availableNow file stream
-    (not a hand-called fold): final table state equals the one-shot
-    batch run — the end-to-end face of the plan-asserted variant."""
-    from subgraph_extractor_spark.streaming.demo import (
-        cdc_chunks_sink_bucketed,
-        serve_cdc_chunks_bucketed,
-    )
-
-    import random
-    rng = random.Random(71)
-    words = [f"s{j}" for j in range(16)]
-    docs = [
-        (i, " ".join(rng.choice(words) for _ in range(rng.randint(5, 20))))
-        for i in range(8)
-    ]
-    ddf = spark.createDataFrame(docs, "doc_id long, text string")
-    stage = tmp_path / "stage"
-    ddf.filter(F.col("doc_id") < 4).coalesce(1).write.parquet(str(stage / "a"))
-    ddf.filter(F.col("doc_id") >= 4).coalesce(1).write.parquet(str(stage / "b"))
-    table = "cdc_chunks_ws_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    try:
-        stream = (
-            spark.readStream.schema(ddf.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(stage / "*"))
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                cdc_chunks_sink_bucketed(
-                    spark, table, str(tmp_path / "kept"),
-                    divisor=4, n_buckets=8,
-                )
-            )
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        assert q.exception() is None
-        got = {
-            tuple(r)
-            for r in serve_cdc_chunks_bucketed(spark, table).collect()
-        }
-        want = {
-            tuple(r)
-            for r in dedup.cdc_chunk_dedup(ddf, "doc_id", "text", divisor=4)
-            .collect()
-        }
-        assert got == want
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_cdc_serve_skips_uncommitted_snapshot(spark, tmp_path):
-    """A crash-interrupted compaction (snapshot dir without _SUCCESS)
-    must not be read — serving falls back to the retained previous
-    snapshot + its cycle's deltas and still returns complete state."""
-    import os
-
-    from subgraph_extractor_spark.streaming.demo import (
-        cdc_chunks_sink,
-        serve_cdc_chunks,
-    )
-
-    docs = [(i, f"alpha{i} beta{i} gamma{i} delta{i} eps{i}") for i in range(6)]
-    ddf = spark.createDataFrame(docs, "doc_id long, text string")
-    state, kept = str(tmp_path / "s"), str(tmp_path / "k")
-    fold = cdc_chunks_sink(spark, state, kept, divisor=4, compact_every=2)
-    for b in range(4):
-        fold(ddf.filter((F.col("doc_id") % 4) == b), b)
-    want = {tuple(r) for r in serve_cdc_chunks(spark, state).collect()}
-    # simulate the crash: c3 exists but its commit marker is gone
-    os.remove(os.path.join(state, "c3", "_SUCCESS"))
-    got = {tuple(r) for r in serve_cdc_chunks(spark, state).collect()}
-    assert got == want
 
 
 def test_chunk_dedup_first_occurrence_is_rank_limit_capped(spark):
@@ -1498,96 +1218,6 @@ def test_prefix_pigeonhole_lemma_property():
         assert pre(a) & pre(b), (sorted(a), sorted(b), t)
 
     check()
-
-
-def test_cdc_chunks_sink_read_during_compaction_is_snapshot_consistent(
-    spark, tmp_path
-):
-    """VERDICT r10 task #6: a reader racing a compaction cycle gets
-    either the OLD or the NEW complete snapshot view, never a mix.
-
-    Three race windows, each driven explicitly:
-
-    1. mid-write (snapshot dir exists, no _SUCCESS yet — the
-       crash-interrupted shape): serving must IGNORE the uncommitted
-       snapshot and return the old complete view;
-    2. reader enumerated its read-set BEFORE the compacting batch
-       landed and pruned: every enumerated path must still exist
-       (previous-cycle retention) and reading them must reproduce the
-       old complete view;
-    3. after _SUCCESS: the read-set is the new snapshot plus only
-       NEWER deltas — never the new snapshot mixed with the deltas it
-       folded in (which would double-count).
-    """
-    import os
-
-    from subgraph_extractor_spark.streaming.demo import (
-        _delta_state_parts,
-        cdc_chunks_sink,
-        serve_cdc_chunks,
-    )
-
-    import random
-    rng = random.Random(48)
-    words = [f"w{j}" for j in range(20)]
-    docs = [
-        (i, " ".join(rng.choice(words) for _ in range(rng.randint(6, 24))))
-        for i in range(12)
-    ]
-    ddf = spark.createDataFrame(docs, "doc_id long, text string")
-    state, kept = str(tmp_path / "state"), str(tmp_path / "kept")
-    fold = cdc_chunks_sink(spark, state, kept, divisor=4, compact_every=2)
-    # batches 0..2: c1 lands at b1 (first compaction, nothing to prune),
-    # v2 is the open cycle's delta
-    for b in range(3):
-        fold(
-            ddf.filter(
-                (F.col("doc_id") >= 3 * b) & (F.col("doc_id") < 3 * (b + 1))
-            ),
-            b,
-        )
-    old_view = {tuple(r) for r in serve_cdc_chunks(spark, state).collect()}
-    want_old = {
-        tuple(r)
-        for r in dedup.cdc_chunk_dedup(
-            ddf.filter("doc_id < 9"), "doc_id", "text", divisor=4
-        ).collect()
-    }
-    assert old_view == want_old
-
-    # window 1: an IN-FLIGHT snapshot write (no _SUCCESS) — plant a
-    # poisoned c3 so that including it would visibly corrupt the view
-    poison = spark.createDataFrame(
-        [(999, 0, "deadbeef")], "doc_id long, chunk_pos int, chunk_sha string"
-    )
-    poison.write.mode("overwrite").parquet(f"{state}/c3")
-    os.remove(f"{state}/c3/_SUCCESS")
-    racing_read = {
-        tuple(r) for r in serve_cdc_chunks(spark, state).collect()
-    }
-    assert racing_read == want_old, "uncommitted snapshot leaked into a read"
-
-    # window 2: reader enumerated BEFORE the compacting batch + prune
-    parts_before = _delta_state_parts(state)
-    fold(ddf.filter("doc_id >= 9 and doc_id < 12"), 3)  # real c3 + prune
-    for p in parts_before:
-        assert os.path.isdir(p), f"pruned a path a one-cycle reader holds: {p}"
-    stale_read = {
-        tuple(r) for r in spark.read.parquet(*parts_before).collect()
-    }
-    assert stale_read == want_old
-
-    # window 3: committed — the read-set is exactly the new snapshot
-    # (no folded-in deltas alongside it)
-    parts_after = _delta_state_parts(state)
-    assert [os.path.basename(p) for p in parts_after] == ["c3"]
-    new_view = {tuple(r) for r in serve_cdc_chunks(spark, state).collect()}
-    want_new = {
-        tuple(r)
-        for r in dedup.cdc_chunk_dedup(ddf, "doc_id", "text", divisor=4)
-        .collect()
-    }
-    assert new_view == want_new
 
 
 def test_jaccard_union_free_bit_equals_jaccard(spark):

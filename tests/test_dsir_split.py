@@ -5,7 +5,6 @@ import hashlib
 from collections import Counter
 
 import pytest
-from pyspark.sql import functions as F
 
 from subgraph_extractor_spark.operators import dsir
 from subgraph_extractor_spark.operators import sampling
@@ -150,87 +149,6 @@ def test_leakage_safe_split_distribution_sane(spark):
     assert sizes["train"] > sizes["valid"] > 0
     assert sizes["train"] > sizes["test"] > 0
     assert 0.70 < sizes["train"] / 2000 < 0.90
-
-
-def test_dsir_streaming_counts_match_batch_bitwise(spark, tmp_path):
-    """The standing hashed-gram model folded over two micro-batches
-    must equal the one-shot batch count exactly — and the DOWNSTREAM
-    weight table built from streamed counts must equal the batch one
-    (exact integer counts, mergeable by addition).  Crash-replay of a
-    batch id re-merges instead of double-counting."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    from subgraph_extractor_spark.streaming.demo import (
-        dsir_counts_sink,
-        serve_dsir_counts,
-    )
-
-    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    stage = tmp_path / "dsir_src"
-    stage.mkdir()
-    even = docs.filter(F.col("doc_id") % 2 == 0)
-    odd = docs.filter(F.col("doc_id") % 2 == 1)
-    papq.write_table(even.toArrow(), str(stage / "p0.parquet"))
-    papq.write_table(odd.toArrow(), str(stage / "p1.parquet"))
-
-    state_dir = str(tmp_path / "dsir_state")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(stage))
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            dsir_counts_sink(spark, state_dir, buckets=64)
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert q.exception() is None
-    assert len(os.listdir(state_dir)) >= 2
-
-    got = {
-        r["h"]: r["cnt"] for r in serve_dsir_counts(spark, state_dir).collect()
-    }
-    want = {
-        r["h"]: r["cnt"]
-        for r in dsir.hashed_bigram_counts(docs, "text", 64).collect()
-    }
-    assert got == want
-
-    # downstream equality: weights from streamed state == batch weights
-    tgt = dsir.hashed_bigram_counts(
-        docs.filter(F.col("doc_id").isin(0, 3)), "text", 64
-    )
-    w_stream = {
-        r["h"]: r["w"]
-        for r in dsir.importance_weights(
-            tgt, serve_dsir_counts(spark, state_dir), 64
-        ).collect()
-    }
-    w_batch = {
-        r["h"]: r["w"]
-        for r in dsir.importance_weights(
-            tgt, dsir.hashed_bigram_counts(docs, "text", 64), 64
-        ).collect()
-    }
-    assert w_stream == w_batch
-
-    # crash-replay idempotence
-    fold = dsir_counts_sink(spark, str(tmp_path / "replay"), buckets=64)
-    fold(even, 0)
-    fold(odd, 1)
-    fold(odd, 1)  # replay of batch 1
-    got2 = {
-        r["h"]: r["cnt"]
-        for r in serve_dsir_counts(spark, str(tmp_path / "replay")).collect()
-    }
-    assert got2 == want
 
 
 def test_weights_denominator_overflow_guard(spark):

@@ -422,7 +422,9 @@ def _partition_dir(td, p):
 def test_stray_file_in_delta_partition_stays_out_of_manifest(spark, tmp_path):
     """The manifest names the one file the writer wrote for each delta
     partition; another valid Parquet file in that directory (a leftover of
-    a failed run, or a file put there by hand) is not picked up."""
+    a failed run, or a file put there by hand) is not picked up, neither
+    by the run that writes the partition nor by a later run that lists it
+    as an already-committed cover partition."""
     import shutil
 
     sizes = CONFIG["tables"]["entity_versions"]["partition_sizes"]
@@ -446,14 +448,18 @@ def test_stray_file_in_delta_partition_stays_out_of_manifest(spark, tmp_path):
         os.path.join(td, committed), os.path.join(stray_dir, "part-stray.parquet")
     )
 
-    for d in (out, ref):
-        run_extraction(spark, CONFIG, tables, d, 18_000_000, 19_000_000)
-    files = read_manifest_files(td)
-    assert not any(f.endswith("part-stray.parquet") for f in files)
-    assert files == read_manifest_files(_table_dir(ref))
-    assert _read_via_manifest(td).sort_by("_block_number").equals(
-        _read_via_manifest(_table_dir(ref)).sort_by("_block_number")
-    )
+    # 19 000 000: the stray's partition is a delta partition; at
+    # 19 100 000 it is a committed cover partition, listed from disk.
+    for end in (19_000_000, 19_100_000):
+        assert target in get_partitions(18_000_000, end, sizes)
+        for d in (out, ref):
+            run_extraction(spark, CONFIG, tables, d, 18_000_000, end)
+        files = read_manifest_files(td)
+        assert not any(f.endswith("part-stray.parquet") for f in files)
+        assert files == read_manifest_files(_table_dir(ref))
+        assert _read_via_manifest(td).sort_by("_block_number").equals(
+            _read_via_manifest(_table_dir(ref)).sort_by("_block_number")
+        )
 
 
 def test_old_signed_export_fails_before_commit(spark, tmp_path):

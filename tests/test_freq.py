@@ -354,7 +354,8 @@ def test_mg_empty_input_is_anchor_identity(spark):
     either side leaves a real summary unchanged.  (r8-advice bug: the
     old rows-carry-metadata encoding crossJoined 1-row metadata
     relations, so a zero-row side wiped BOTH sides' state — via the
-    streaming sink, permanent data loss on any empty micro-batch.)"""
+    since-removed streaming sink, permanent data loss on any empty
+    micro-batch.)"""
     empty = spark.createDataFrame([], "key string")
     e = FQ.mg_summary(empty, "key", 3)
     assert [tuple(r) for r in e.collect()] == [(None, 0, 0, 0)]
@@ -492,109 +493,6 @@ def test_mg_spark_fold_matches_model_with_degenerate_substreams(spark):
         assert sorted(map(tuple, rows), key=str) == sorted(
             exp, key=str
         ), (substreams, m)
-
-
-def test_mg_sink_skips_empty_batch(spark, tmp_path):
-    """An empty micro-batch leaves the standing MG state byte-for-byte
-    untouched (no new version) — defense in depth over the anchor fix."""
-    from subgraph_extractor_spark.streaming.demo import (
-        mg_heavy_hitters_sink,
-        serve_mg_heavy_hitters,
-        _state_versions,
-    )
-
-    state_dir = str(tmp_path / "mg_state")
-    sink = mg_heavy_hitters_sink(spark, state_dir, key_col="key", m=2)
-    sink(spark.createDataFrame([("x",)] * 3, "key string"), 0)
-    before = sorted(
-        map(tuple, serve_mg_heavy_hitters(spark, state_dir).collect()),
-        key=str,
-    )
-    sink(spark.createDataFrame([], "key string"), 1)
-    assert [v for v, _ in _state_versions(state_dir)] == [0]
-    assert before == sorted(
-        map(tuple, serve_mg_heavy_hitters(spark, state_dir).collect()),
-        key=str,
-    )
-
-
-def test_mg_streaming_sink_matches_batch_fold(spark, tmp_path):
-    """The streamed standing summary == the left-fold of per-batch
-    summaries replayed in batch (exact, incl. err), the validity law
-    holds against the UNION's true counts, and crash-replay does not
-    double-count."""
-    import os
-
-    import pyarrow.parquet as papq
-
-    from subgraph_extractor_spark.streaming.demo import (
-        mg_heavy_hitters_sink,
-        serve_mg_heavy_hitters,
-        _state_versions,
-    )
-
-    keys = _zipf_keys(19, n=1600)
-    df = spark.createDataFrame(
-        [(i, k) for i, k in enumerate(keys)], "i long, key string"
-    )
-    stage = tmp_path / "mg_src"
-    stage.mkdir()
-    papq.write_table(
-        df.filter("i % 2 = 0").select("key").toArrow(),
-        str(stage / "p0.parquet"),
-    )
-    papq.write_table(
-        df.filter("i % 2 = 1").select("key").toArrow(),
-        str(stage / "p1.parquet"),
-    )
-    m = 7
-    state_dir = str(tmp_path / "mg_state")
-    stream = (
-        spark.readStream.schema("key string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(stage))
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            mg_heavy_hitters_sink(spark, state_dir, key_col="key", m=m)
-        )
-        .option("checkpointLocation", str(tmp_path / "mg_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert q.exception() is None
-
-    served = sorted(
-        map(tuple, serve_mg_heavy_hitters(spark, state_dir).collect()),
-        key=str,
-    )
-    # batch replay of the same fold (batch order == file order)
-    s0 = FQ.mg_summary(
-        df.filter("i % 2 = 0").select("key"), "key", m
-    )
-    s1 = FQ.mg_summary(
-        df.filter("i % 2 = 1").select("key"), "key", m
-    )
-    assert served == sorted(
-        map(tuple, FQ.mg_merge(s0, s1, m).collect()), key=str
-    )
-
-    # validity vs the union's truth
-    from collections import Counter
-
-    true = Counter(keys)
-    for k, c, nt, e in served:
-        assert nt == len(keys) and c <= true[k] and true[k] - c <= e
-
-    # crash replay of the last batch id: identical state
-    last_v = max(v for v, _ in _state_versions(state_dir))
-    sink = mg_heavy_hitters_sink(spark, state_dir, key_col="key", m=m)
-    sink(df.filter("i % 2 = 1").select("key"), last_v)
-    assert served == sorted(
-        map(tuple, serve_mg_heavy_hitters(spark, state_dir).collect()),
-        key=str,
-    )
 
 
 def test_mg_grouped_validity_per_group(spark):

@@ -68,6 +68,19 @@ def test_kmv_merge_law(spark, docs):
         "_kmv"
     ]
     assert merged == direct
+    # grouped, folded left over three disjoint slices: the standing
+    # per-group sketch equals one sketch over everything
+    slices = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
+    state = None
+    for s in slices:
+        new = sk.kmv_sketch(s, "text", k=k, group_cols=["lang"])
+        state = new if state is None else sk.kmv_merge(
+            state.unionByName(new), k=k, group_cols=["lang"]
+        )
+    folded = {r["lang"]: r["_kmv"] for r in state.collect()}
+    whole = sk.kmv_sketch(docs, "text", k=k, group_cols=["lang"])
+    whole = {r["lang"]: r["_kmv"] for r in whole.collect()}
+    assert folded == whole
 
 
 def test_kmv_pruned_identical_when_estimate_sane(spark, docs):
@@ -250,66 +263,6 @@ def test_pps_invalid_n(spark, docs):
 
 
 # ------------------------------------------------------------ streaming
-
-
-def test_kmv_streaming_sink_matches_batch(spark, docs, tmp_path):
-    """Stream == batch for the KMV state: three micro-batches folded by
-    kmv_sketch_sink serve a sketch table bit-identical to a one-shot
-    kmv_sketch over everything ingested — and a crash-replayed batch
-    overwrites its own version instead of double-merging."""
-    import pyarrow.parquet as papq
-
-    from subgraph_extractor_spark.operators import sketches as sk
-    from subgraph_extractor_spark.streaming.demo import (
-        kmv_sketch_sink,
-        serve_kmv_sketch,
-    )
-
-    d = docs.select("doc_id", "lang", "text")
-    stage = tmp_path / "kmv_src"
-    stage.mkdir()
-    for i in range(3):
-        papq.write_table(
-            d.filter(F.col("doc_id") % 3 == i).toArrow(),
-            str(stage / f"p{i}.parquet"),
-        )
-    state = str(tmp_path / "kmv_state")
-    fold = kmv_sketch_sink(
-        spark, state, "text", k=24, group_cols=("lang",)
-    )
-    q = (
-        spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(stage))
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", str(tmp_path / "kmv_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    served = {
-        r["lang"]: r["_kmv"] for r in serve_kmv_sketch(spark, state).collect()
-    }
-    direct = {
-        r["lang"]: r["_kmv"]
-        for r in sk.kmv_sketch(d, "text", k=24, group_cols=["lang"]).collect()
-    }
-    assert served == direct
-
-    # crash-replay idempotence: re-folding the last batch id must not
-    # double-merge (the merge is idempotent anyway — k-min of a union
-    # with itself — but the version discipline must also hold)
-    last_batch = spark.read.parquet(str(stage / "p2.parquet"))
-    fold(last_batch, 2)
-    replayed = {
-        r["lang"]: r["_kmv"] for r in serve_kmv_sketch(spark, state).collect()
-    }
-    assert replayed == direct
-
-    # lineage guard: an older batch id than the standing max refuses
-    with pytest.raises(ValueError):
-        fold(last_batch, 0)
 
 
 def test_kmv_jaccard_grouped_pairs_by_key(spark, docs):

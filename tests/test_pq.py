@@ -542,176 +542,6 @@ def test_ivfpq_encode_matches_build(spark):
     assert a == b
 
 
-def test_ivfpq_codes_sink_stream_equals_batch(spark, tmp_path):
-    """Continual vector ingest: the availableNow stream through
-    ivfpq_codes_sink leaves exactly the code table a one-shot build
-    with the same persisted model emits, a crash-replayed batch does
-    not double-append, and a search served over the streamed table
-    equals the one-shot search."""
-    from subgraph_extractor_spark.streaming.demo import (
-        ivfpq_codes_sink,
-        serve_ivfpq_codes,
-    )
-
-    rows = _rand_rows(37, 30, 8)
-    df = _mk_df(spark, rows)
-    cells, books, codes = pq.ivfpq_build_index(
-        df, "vec", "id", n_cells=2, m=2, k_codes=4,
-        iters_cells=1, iters_pq=1,
-    )
-    mp = str(tmp_path / "model.json")
-    pq.save_index_model(mp, cells, books)
-    stage = tmp_path / "stage"
-    df.filter(df.id < 15).coalesce(1).write.parquet(str(stage / "a"))
-    df.filter(df.id >= 15).coalesce(1).write.parquet(str(stage / "b"))
-    codes_dir = str(tmp_path / "codes")
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(stage / "*"))
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            ivfpq_codes_sink(spark, mp, codes_dir, "vec", "id")
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    assert q.exception() is None
-    want = sorted(
-        (r["id"], r["cell"], tuple(r["codes"])) for r in codes.collect()
-    )
-    served = serve_ivfpq_codes(spark, codes_dir)
-    got = sorted(
-        (r["id"], r["cell"], tuple(r["codes"])) for r in served.collect()
-    )
-    assert got == want
-
-    # crash replay on a fresh dir: replaying a batch overwrites its
-    # own version instead of double-appending
-    cd2 = str(tmp_path / "codes2")
-    fold = ivfpq_codes_sink(spark, mp, cd2, "vec", "id")
-    fold(df.filter(df.id < 15), 0)
-    fold(df.filter(df.id >= 15), 1)
-    fold(df.filter(df.id >= 15), 1)
-    got2 = sorted(
-        (r["id"], r["cell"], tuple(r["codes"]))
-        for r in serve_ivfpq_codes(spark, cd2).collect()
-    )
-    assert got2 == want
-    # searches over streamed vs one-shot tables agree
-    a = sorted(map(tuple, pq.ivfpq_search(
-        df, "vec", "id", cells, books, codes,
-        nprobe=1, topk=2, n_queries=3, exclude_self=True).collect()))
-    b = sorted(map(tuple, pq.ivfpq_search(
-        df, "vec", "id", cells, books, serve_ivfpq_codes(spark, cd2),
-        nprobe=1, topk=2, n_queries=3, exclude_self=True).collect()))
-    assert a == b
-
-
-def test_ivfpq_codes_sink_compaction(spark, tmp_path):
-    """The code-delta sink's shared compaction housekeeping: with
-    compact_every=2, four single-batch ingests leave a committed
-    snapshot + the retained previous cycle (bounded dirs), replaying
-    the compacting batch is idempotent, and the served table always
-    equals the one-shot build."""
-    import os
-
-    from subgraph_extractor_spark.streaming.demo import (
-        ivfpq_codes_sink,
-        serve_ivfpq_codes,
-    )
-
-    rows = _rand_rows(41, 32, 8)
-    df = _mk_df(spark, rows)
-    cells, books, codes = pq.ivfpq_build_index(
-        df, "vec", "id", n_cells=2, m=2, k_codes=4,
-        iters_cells=1, iters_pq=1,
-    )
-    mp = str(tmp_path / "model.json")
-    pq.save_index_model(mp, cells, books)
-    cd = str(tmp_path / "codes")
-    fold = ivfpq_codes_sink(spark, mp, cd, "vec", "id", compact_every=2)
-    for b in range(4):
-        fold(df.filter((df.id % 4) == b), b)
-    dirs = sorted(os.listdir(cd))
-    assert "c1" in dirs and "c3" in dirs          # both compactions landed
-    assert "v0" not in dirs and "v1" not in dirs  # first cycle pruned at c3
-    assert "v2" in dirs and "v3" in dirs          # current cycle retained
-    want = sorted(
-        (r["id"], r["cell"], tuple(r["codes"])) for r in codes.collect()
-    )
-    got = sorted(
-        (r["id"], r["cell"], tuple(r["codes"]))
-        for r in serve_ivfpq_codes(spark, cd).collect()
-    )
-    assert got == want
-    # crash-replay of the compacting batch: previous cycle still on
-    # disk, state rebuilds identically
-    fold(df.filter((df.id % 4) == 3), 3)
-    got2 = sorted(
-        (r["id"], r["cell"], tuple(r["codes"]))
-        for r in serve_ivfpq_codes(spark, cd).collect()
-    )
-    assert got2 == want
-
-
-def test_ivfpq_remove_ids_lifecycle(spark, tmp_path):
-    """The delete face (FAISS remove_ids): tombstoned ids disappear
-    from the served table immediately (logical delete), survive a
-    non-compacting ingest, are dropped PHYSICALLY by the next
-    compaction (which clears the tombstones), and a search over the
-    served table never returns them."""
-    import os
-
-    from subgraph_extractor_spark.streaming.demo import (
-        _tombstone_versions,
-        ivfpq_codes_sink,
-        ivfpq_remove_ids,
-        serve_ivfpq_codes,
-    )
-
-    rows = _rand_rows(43, 24, 8)
-    df = _mk_df(spark, rows)
-    cells, books, _codes = pq.ivfpq_build_index(
-        df, "vec", "id", n_cells=2, m=2, k_codes=4,
-        iters_cells=1, iters_pq=1,
-    )
-    mp = str(tmp_path / "model.json")
-    pq.save_index_model(mp, cells, books)
-    cd = str(tmp_path / "codes")
-    fold = ivfpq_codes_sink(spark, mp, cd, "vec", "id", compact_every=3)
-    fold(df.filter(df.id < 12), 0)
-    fold(df.filter(df.id >= 12), 1)
-    # logical delete, effective immediately
-    dead = {0, 5, 13}
-    ivfpq_remove_ids(
-        spark, cd, spark.createDataFrame([(i,) for i in dead], "id long")
-    )
-    served = {r["id"] for r in serve_ivfpq_codes(spark, cd).collect()}
-    assert served == {i for i, _ in rows} - dead
-    # search never returns a tombstoned doc
-    hits = {
-        r["doc_id"]
-        for r in pq.ivfpq_search(
-            df, "vec", "id", cells, books, serve_ivfpq_codes(spark, cd),
-            nprobe=2, topk=5,
-        ).collect()
-    }
-    assert not (hits & dead)
-    # third ingest triggers compaction (compact_every=3): rows drop
-    # physically, tombstones clear
-    extra = _mk_df(spark, [(100 + i, v) for i, v in rows[:3]])
-    fold(extra, 2)
-    assert _tombstone_versions(cd) == []
-    snap = spark.read.parquet(os.path.join(cd, "c2"))
-    assert not ({r["id"] for r in snap.collect()} & dead)
-    served2 = {r["id"] for r in serve_ivfpq_codes(spark, cd).collect()}
-    assert served2 == ({i for i, _ in rows} - dead) | {100, 101, 102}
-
-
 def _mk_labeled_df(spark, rows, parts=6):
     return spark.createDataFrame(
         [(i, [float(x) for x in v], i % 3) for i, v in rows],
@@ -811,43 +641,3 @@ def test_ivfpq_filtered_scan_partition_prunes(spark, tmp_path):
     assert "label" in pf, plan[:2000]
     assert all(r["doc_id"] % 3 == 1 for r in out.collect())
 
-
-def test_ivfpq_codes_sink_carry_cols_filtered_serving(spark, tmp_path):
-    """Streamed metadata-carrying ingest: code deltas keep the carry
-    column through versioned appends AND compaction, and a
-    filter_expr search over the served table equals the filtered
-    search over a one-shot carried encode."""
-    from subgraph_extractor_spark.streaming.demo import (
-        ivfpq_codes_sink,
-        serve_ivfpq_codes,
-    )
-
-    rows = _rand_rows(43, 30, 8)
-    df = _mk_labeled_df(spark, rows)
-    cells, books, _ = pq.ivfpq_build_index(
-        df, "vec", "id", n_cells=2, m=2, k_codes=4,
-        iters_cells=1, iters_pq=1,
-    )
-    mp = str(tmp_path / "model.json")
-    pq.save_index_model(mp, cells, books)
-    cd = str(tmp_path / "codes")
-    fold = ivfpq_codes_sink(
-        spark, mp, cd, "vec", "id", carry_cols=["label"],
-        compact_every=2,
-    )
-    fold(df.filter(df.id < 10), 0)
-    fold(df.filter((df.id >= 10) & (df.id < 20)), 1)  # triggers compaction
-    fold(df.filter(df.id >= 20), 2)
-    served = serve_ivfpq_codes(spark, cd)
-    assert "label" in served.columns
-    one_shot = pq.ivfpq_encode(
-        df, "vec", "id", cells, books, carry_cols=["label"]
-    )
-    qdf = _mk_df(spark, [(i + 100, v) for i, v in rows[:4]])
-    a = sorted(map(tuple, pq.ivfpq_search(
-        qdf, "vec", "id", cells, books, one_shot,
-        nprobe=1, topk=2, filter_expr="label = 1").collect()))
-    b = sorted(map(tuple, pq.ivfpq_search(
-        qdf, "vec", "id", cells, books, served,
-        nprobe=1, topk=2, filter_expr="label = 1").collect()))
-    assert a == b and a

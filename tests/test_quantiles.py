@@ -357,87 +357,6 @@ def test_grouped_validation(spark):
         Q.quantile_merge_grouped(s, s, 0, ["grp"])
 
 
-def test_quantile_streaming_sink_matches_batch_fold(spark, tmp_path):
-    """The streamed standing summary == the batch left-fold of
-    per-batch summaries (exact, incl. err and the anchor), the
-    validity law holds against the union's truth, crash-replay does
-    not double-count, and empty batches leave the state untouched."""
-    import random
-
-    import pyarrow.parquet as papq
-
-    from subgraph_extractor_spark.streaming.demo import (
-        _state_versions,
-        quantile_summary_sink,
-        serve_quantile_summary,
-    )
-
-    rnd = random.Random(53)
-    vals = [rnd.randint(0, 2_000) for _ in range(1_400)]
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vals)], "i long, value long"
-    )
-    stage = tmp_path / "qs_src"
-    stage.mkdir()
-    papq.write_table(
-        df.filter("i % 2 = 0").select("value").toArrow(),
-        str(stage / "p0.parquet"),
-    )
-    papq.write_table(
-        df.filter("i % 2 = 1").select("value").toArrow(),
-        str(stage / "p1.parquet"),
-    )
-    k = 9
-    state_dir = str(tmp_path / "qs_state")
-    stream = (
-        spark.readStream.schema("value long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(stage))
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            quantile_summary_sink(spark, state_dir, value_col="value", k=k)
-        )
-        .option("checkpointLocation", str(tmp_path / "qs_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert q.exception() is None
-
-    served = sorted(
-        map(tuple, serve_quantile_summary(spark, state_dir).collect()),
-        key=str,
-    )
-    s0 = Q.quantile_summary(df.filter("i % 2 = 0").select("value"), "value", k)
-    s1 = Q.quantile_summary(df.filter("i % 2 = 1").select("value"), "value", k)
-    assert served == sorted(
-        map(tuple, Q.quantile_merge(s0, s1, k).collect()), key=str
-    )
-    # validity vs the union's truth
-    rows = [(i, v, w) for i, v, w, _, _ in served if w > 0]
-    n = max(r[3] for r in served)
-    err = max(r[4] for r in served)
-    assert n == len(vals) and sum(w for _, _, w in rows) == n
-    _law(rows, n, err, vals)
-
-    # crash replay of the last batch id: identical state
-    last_v = max(v for v, _ in _state_versions(state_dir))
-    sink = quantile_summary_sink(spark, state_dir, value_col="value", k=k)
-    sink(df.filter("i % 2 = 1").select("value"), last_v)
-    assert served == sorted(
-        map(tuple, serve_quantile_summary(spark, state_dir).collect()),
-        key=str,
-    )
-    # empty batch: no new version, state byte-identical
-    sink(spark.createDataFrame([], "value long"), last_v + 1)
-    assert max(v for v, _ in _state_versions(state_dir)) == last_v
-    assert served == sorted(
-        map(tuple, serve_quantile_summary(spark, state_dir).collect()),
-        key=str,
-    )
-
-
 def test_grouped_oracle_replay_matches_spark(spark):
     """The grouped single-build oracle (per-group ROW_NUMBER + the
     same floor buckets) equals quantile_summary_grouped row-for-row,

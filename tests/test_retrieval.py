@@ -321,75 +321,3 @@ def test_champion_merge_schema_validation(corpus):
     with pytest.raises(ValueError):
         R.merge_champion_lists(ch, ch, m=0)
 
-
-def test_champion_streaming_matches_batch_rebuild(spark, tmp_path):
-    """Champion state folded over two micro-batches of disjoint docs ==
-    a one-shot build over everything (merge exactness end-to-end
-    through the stream), and crash-replay of a batch id re-merges
-    against the pre-batch version instead of double-counting."""
-    import os
-
-    import pyarrow.parquet as papq
-    from pyspark.sql import functions as F
-
-    from subgraph_extractor_spark.streaming.demo import (
-        champion_lists_sink,
-        serve_champion_lists,
-    )
-
-    rows = [
-        (1, "spark streams join the vector table"),
-        (2, "join join join and more join here ok"),
-        (3, "nothing relevant whatsoever in this text"),
-        (4, "vector vector"),
-        (5, "the quick join fox"),
-        (6, "vector join stream"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    stage = tmp_path / "champ_src"
-    stage.mkdir()
-    papq.write_table(
-        docs.filter(F.col("doc_id") <= 3).toArrow(), str(stage / "p0.parquet")
-    )
-    papq.write_table(
-        docs.filter(F.col("doc_id") > 3).toArrow(), str(stage / "p1.parquet")
-    )
-    state_dir = str(tmp_path / "champ_state")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(stage))
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            champion_lists_sink(spark, state_dir, m=2)
-        )
-        .option("checkpointLocation", str(tmp_path / "champ_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert q.exception() is None
-    assert len(os.listdir(state_dir)) >= 2
-
-    served = serve_champion_lists(spark, state_dir)
-    rebuilt = R.champion_lists(docs, "doc_id", "text", m=2)
-    key = lambda df: sorted(map(tuple, df.collect()), key=str)
-    assert key(served) == key(rebuilt)
-
-    # served ranking == rebuilt ranking
-    got = [tuple(r) for r in R.champion_topk(served, ["join", "vector"], k=4).collect()]
-    exp = [tuple(r) for r in R.champion_topk(rebuilt, ["join", "vector"], k=4).collect()]
-    assert got == exp
-
-    # crash replay: re-running the LAST batch id must not double-count
-    from subgraph_extractor_spark.streaming.demo import _state_versions
-
-    last_v = max(v for v, _ in _state_versions(state_dir))
-    sink = champion_lists_sink(spark, state_dir, m=2)
-    sink(docs.filter(F.col("doc_id") > 3), last_v)
-    assert key(serve_champion_lists(spark, state_dir)) == key(rebuilt)
-
-    # foreign-state guard: a batch id BEHIND the standing state refuses
-    with pytest.raises(ValueError):
-        sink(docs.limit(1), last_v - 1)

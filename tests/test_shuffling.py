@@ -106,6 +106,9 @@ def test_append_to_shards_continues_positions(spark, docs):
         assert sorted(poss) == list(range(start + 1, start + 1 + len(poss)))
         # no collision with standing positions
         assert not set(poss) & set(by_shard_old.get(shard, []))
+        # standing + appended is dense 1..n across the whole corpus
+        union = sorted(poss + by_shard_old.get(shard, []))
+        assert union == list(range(1, len(union) + 1)), shard
     # same hash rule: a doc lands in the same shard either way
     full = deterministic_shuffle(docs, "doc_id", 4, "ep0")
     shard_of = {r["doc_id"]: r["shard"] for r in full.collect()}
@@ -115,79 +118,6 @@ def test_append_to_shards_continues_positions(spark, docs):
     again = append_to_shards(new, counts, "doc_id", 4, "ep0")
     assert sorted((r["shard"], r["pos"], r["doc_id"]) for r in again.collect()) \
         == sorted((r["shard"], r["pos"], r["doc_id"]) for r in appended.collect())
-
-
-def test_streaming_shard_append_matches_batch_sequence(spark, docs, tmp_path):
-    """Two micro-batches through shard_append_sink must produce exactly
-    the layout of the equivalent batch-side sequence (shuffle batch 0,
-    append batch 1): standing rows identical, appended positions
-    continue per shard, union is dense per shard."""
-    import os
-
-    import pyarrow.parquet as papq
-
-    from subgraph_extractor_spark.operators.shuffling import (
-        append_to_shards,
-        shard_counts,
-    )
-    from subgraph_extractor_spark.streaming.demo import shard_append_sink
-
-    d = docs.select("doc_id")
-    b0 = d.filter(F.col("doc_id") % 2 == 0)
-    b1 = d.filter(F.col("doc_id") % 2 == 1)
-    stage = tmp_path / "src"
-    stage.mkdir()
-    papq.write_table(b0.toArrow(), str(stage / "p0.parquet"))
-    papq.write_table(b1.toArrow(), str(stage / "p1.parquet"))
-
-    data_dir = str(tmp_path / "shards")
-    state_dir = str(tmp_path / "counts")
-    q = (
-        spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(stage))
-        .writeStream.foreachBatch(
-            shard_append_sink(spark, data_dir, state_dir, "doc_id", 4, "ep0")
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got = spark.read.parquet(data_dir)
-    # batch-side reference: shuffle b0, then append b1 on its counts.
-    # NOTE: the file-source batch order is the staged-file listing
-    # order; derive the reference from what batch 0 actually was.
-    first = spark.read.parquet(f"{data_dir}/batch=0")
-    from subgraph_extractor_spark.operators.shuffling import (
-        deterministic_shuffle,
-    )
-
-    first_ids = {r["doc_id"] for r in first.select("doc_id").collect()}
-    ref0 = deterministic_shuffle(
-        d.filter(F.col("doc_id").isin(first_ids)), "doc_id", 4, "ep0"
-    )
-    ref1 = append_to_shards(
-        d.filter(~F.col("doc_id").isin(first_ids)),
-        shard_counts(ref0),
-        "doc_id",
-        4,
-        "ep0",
-    )
-    want = sorted(
-        (r["shard"], int(r["pos"]), r["doc_id"])
-        for r in ref0.collect() + ref1.collect()
-    )
-    assert sorted(
-        (r["shard"], int(r["pos"]), r["doc_id"]) for r in got.collect()
-    ) == want
-    # dense 1..n per shard across the whole ingested corpus
-    by_shard = {}
-    for r in got.collect():
-        by_shard.setdefault(r["shard"], []).append(int(r["pos"]))
-    for shard, poss in by_shard.items():
-        assert sorted(poss) == list(range(1, len(poss) + 1)), shard
 
 
 def test_negative_samples_deterministic_and_well_formed(spark, docs):

@@ -863,12 +863,13 @@ def test_banded_bucket_cap_mirrors_oracle(spark):
 
 def test_banded_wide_config_mirrors_oracle(spark):
     """The scale sweep's SUB-LINEAR config (128 bits / 8 bands =
-    16-bit rows — scripts/filtered_scale_bench.py measured exponents
-    0.41/0.45 with flat planted recall) gets the same oracle-grade
-    evidence as the registry's 32/4 face: Spark vs the generated
-    DuckDB SQL row-for-row on a synthetic corpus with planted
-    same-label near-duplicates.  Also exercises a MULTI-column filter
-    (label, tenant): both columns must ride the candidate join key."""
+    16-bit rows — scripts/filtered_scale_bench.py, kept in git history,
+    measured exponents 0.41/0.45 with flat planted recall) gets the
+    same oracle-grade evidence as the registry's 32/4 face: Spark vs
+    the generated DuckDB SQL row-for-row on a synthetic corpus with
+    planted same-label near-duplicates.  Also exercises a MULTI-column
+    filter (label, tenant): both columns must ride the candidate join
+    key."""
     import duckdb
     import numpy as np
     import pandas as pd
